@@ -194,18 +194,12 @@ object FecDocs {
         col("linkage_id"), col("cmte_id"), col("cmte_tp"), col("cmte_dsgn"))))
         .as("committees"))
 
-  /** J6: incremental load — upsert only the docs whose key is not in
+  /** J6: incremental load — store only the docs whose key is not in
     * the store yet (the reference's LEFT ANTI against loaded_* progress
-    * tables; the LIMIT batching dissolves into one delta). */
+    * tables; the LIMIT batching dissolves into one delta). Bucket-pruned
+    * via [[DocStore.insertNew]]; returns the number of distinct docs
+    * stored (a batch repeating a `doc_id` stores it once, last wins). */
   def loadIncremental(store: DocStore, indexName: String,
-      docs: DataFrame): Long = {
-    val delta = store.read(indexName) match {
-      case None => docs
-      case Some(old) =>
-        docs.join(old.select(col("doc_id")), Seq("doc_id"), "left_anti")
-    }
-    val n = delta.count()
-    if (n > 0) store.upsert(indexName, "doc_id", delta)
-    n
-  }
+      docs: DataFrame): Long =
+    store.insertNew(indexName, "doc_id", docs).count()
 }

@@ -14,9 +14,10 @@ import java.nio.file.{Files, Paths}
   *
   * Every stage is the same pure DataFrame function the specs exercise
   * individually; this object only wires them, so running the pipeline
-  * end-to-end inherits each stage's tested semantics. Checkpoint-based
-  * incremental variants of the doc/graph loads live in
-  * [[FecDocs.loadIncremental]] and [[graft.streaming.IncrementalPipeline]].
+  * end-to-end inherits each stage's tested semantics. The incremental
+  * doc load is [[FecDocs.loadIncremental]] (a bucket-pruned
+  * insert-only [[graft.io.DocStore.insertNew]]); the checkpoint-based
+  * streaming variant is [[graft.streaming.IncrementalPipeline]].
   */
 object FecPipeline {
 

@@ -3,7 +3,6 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.BucketedParquet
-import graft.io.BucketedParquet.B
 
 /** Property-graph vertex/edge store with Cypher-MERGE semantics over
   * Parquet (SURVEY §1.3, §2.9).
@@ -55,54 +54,33 @@ final class GraphStore(spark: SparkSession, baseDir: String,
 
   /** MERGE semantics on a keyed table; see class doc. */
   private def mergeInto(dir: String, keyCols: Seq[String], batch: DataFrame,
-      uuidCol: Column): Unit = {
-    // last-writer-wins within the batch: keep the LAST occurrence per
-    // key (matches sequential UNWIND application). max_by hash-agg —
-    // one shuffle, no per-key sort.
-    val propCols0 = batch.columns.filterNot(keyCols.contains).toSeq
-    val deduped0 =
-      if (propCols0.isEmpty) batch.dropDuplicates(keyCols)
-      else batch.withColumn("__ord", monotonically_increasing_id())
-        .groupBy(keyCols.map(col): _*)
-        .agg(max_by(struct(propCols0.map(col): _*), col("__ord")).as("__s"))
-        .select(keyCols.map(col) ++
-          propCols0.map(c => col(s"__s.$c").as(c)): _*)
-    // evaluated twice (touched-bucket collect + merge join) — persist
-    // for the duration of the write, released before returning
-    val deduped = deduped0.withColumn("uuid", uuidCol).persist()
-    // the stored layout's bucket count is authoritative over the
-    // constructor default once the table exists
-    val n = BucketedParquet.layoutBuckets(dir, numBuckets)
-    val touched = BucketedParquet.touchedBuckets(deduped, keyCols, n)
-    if (touched.isEmpty) { deduped.unpersist(); return }
-    val merged = BucketedParquet.readBuckets(spark, dir, touched) match {
-      case None => deduped
-      case Some(old) =>
-        val propCols = deduped.columns.filterNot(keyCols.contains).toSeq
-        val oldRenamed = old.select(
-          (keyCols.map(col) ++
-            old.columns.filterNot(keyCols.contains)
-              .map(c => col(c).as(s"__old_$c"))): _*)
-        val joined = deduped.join(oldRenamed, keyCols, "full_outer")
-        // SET-on-match: incoming value wins when the batch row exists;
-        // the uuid keeps the OLD value when present (ON CREATE only)
-        val outCols = keyCols.map(col) ++ propCols.map { c =>
-          val oldC = s"__old_$c"
-          if (c == "uuid")
-            (if (old.columns.contains("uuid"))
-              coalesce(col(oldC), col(c)) else col(c)).as("uuid")
-          else if (old.columns.contains(c))
-            when(col("uuid").isNotNull, col(c)) // batch row present
-              .otherwise(col(oldC)).as(c)
-          else col(c).as(c)
-        }
-        joined.select(outCols: _*)
+      uuidCol: Column): Unit =
+    BucketedParquet.merge(dir, keyCols, batch, numBuckets) { (stored, d) =>
+      val deduped = d.withColumn("uuid", uuidCol)
+      stored match {
+        case None => deduped
+        case Some(old) =>
+          val propCols = deduped.columns.filterNot(keyCols.contains).toSeq
+          val oldRenamed = old.select(
+            (keyCols.map(col) ++
+              old.columns.filterNot(keyCols.contains)
+                .map(c => col(c).as(s"__old_$c"))): _*)
+          val joined = deduped.join(oldRenamed, keyCols, "full_outer")
+          // SET-on-match: incoming value wins when the batch row exists;
+          // the uuid keeps the OLD value when present (ON CREATE only)
+          val outCols = keyCols.map(col) ++ propCols.map { c =>
+            val oldC = s"__old_$c"
+            if (c == "uuid")
+              (if (old.columns.contains("uuid"))
+                coalesce(col(oldC), col(c)) else col(c)).as("uuid")
+            else if (old.columns.contains(c))
+              when(col("uuid").isNotNull, col(c)) // batch row present
+                .otherwise(col(oldC)).as(c)
+            else col(c).as(c)
+          }
+          joined.select(outCols: _*)
+      }
     }
-    BucketedParquet.writeBuckets(dir,
-      merged.withColumn(B, BucketedParquet.bucketOf(keyCols, n)),
-      touched, markerKey = keyCols, numBuckets = n)
-    deduped.unpersist()
-  }
 
   /** MERGE a vertex batch: `batch` columns = keyCols ++ props. */
   def mergeVertices(label: String, keyCols: Seq[String],
@@ -119,43 +97,20 @@ final class GraphStore(spark: SparkSession, baseDir: String,
   /** Amendment tombstone (G8): DETACH DELETE by key — remove matching
     * vertices AND any edges in `edgeTypes` referencing them via
     * `edgeKeyCols` (the edge columns holding this label's key). Only
-    * the buckets holding deleted keys are rewritten. */
+    * buckets that lose a row are rewritten, so a replayed tombstone
+    * leaves the store byte-identical; see
+    * [[BucketedParquet.deleteKeys]]. */
   def detachDelete(label: String, keyCols: Seq[String], keys: DataFrame,
       edges: Seq[(String, Seq[String])]): Unit = {
     val keysD = keys.select(keyCols.map(col): _*).distinct()
       // materialized once: reused to bucket + anti-join several tables
       .localCheckpoint(true)
-    deleteFrom(vertexDir(label), keyCols, keysD)
+    BucketedParquet.deleteKeys(vertexDir(label), keyCols, keysD, numBuckets)
     edges.foreach { case (tpe, edgeKeyCols) =>
       val renamedKeys = keysD.select(
         keyCols.zip(edgeKeyCols).map { case (k, ek) => col(k).as(ek) }: _*)
-      deleteFrom(edgeDir(tpe), edgeKeyCols, renamedKeys)
+      BucketedParquet.deleteKeys(edgeDir(tpe), edgeKeyCols, renamedKeys,
+        numBuckets)
     }
-  }
-
-  private def deleteFrom(dir: String, matchCols: Seq[String],
-      keysD: DataFrame): Unit = {
-    if (!BucketedParquet.exists(dir)) return
-    // bucket ids are computable from the keys only when the table is
-    // laid out by exactly the match columns (vertices); an edge deleted
-    // via a SUBSET of its identity (e.g. SPENT by (file_num, tran_id))
-    // discovers its touched buckets with a key-column-pruned semi-join
-    // scan instead — still no rewrite outside them.
-    val n = BucketedParquet.layoutBuckets(dir, numBuckets)
-    val touched: Seq[Int] =
-      if (BucketedParquet.layoutKey(dir).contains(matchCols))
-        BucketedParquet.touchedBuckets(keysD, matchCols, n)
-      else spark.read.option("mergeSchema", "true").parquet(dir)
-        .join(keysD, matchCols, "left_semi")
-        .select(col(B)).distinct().collect().map(_.getInt(0)).toSeq.sorted
-    if (touched.isEmpty) return
-    BucketedParquet.readBuckets(spark, dir, touched, keepBucket = true)
-      .foreach { old =>
-        // rows keep their STORED bucket — the layout key may not be
-        // recomputable from matchCols
-        val kept = old.join(keysD, matchCols, "left_anti")
-        BucketedParquet.writeBuckets(dir, kept, touched,
-          markerKey = matchCols, numBuckets = n)
-      }
   }
 }

@@ -17,12 +17,18 @@ import java.nio.file.{Files, Path, Paths}
   * 1k-row batch against a 100 TB table rewrites ~batch-sized buckets,
   * not the store. Rows are repartitioned on the bucket id before the
   * write so each bucket directory stays one file per write.
+  *
+  * This object is the ONLY owner of that protocol: the stores supply
+  * a `combine` function to [[merge]] (ES `index`/`update`, Cypher
+  * `MERGE`), and use [[deleteKeys]] (`es.delete`, `DETACH DELETE`) and
+  * [[insertNew]]/[[storedKeys]] (the `es.exists` guard). The layout,
+  * journal and crash recovery stay private.
   */
 object BucketedParquet {
 
   val B = "__bucket"
 
-  def exists(dir: String): Boolean = Files.exists(Paths.get(dir))
+  private def exists(dir: String): Boolean = Files.exists(Paths.get(dir))
 
   /** Null-safe normalized key strings (null → single space, so a null
     * key still buckets deterministically). */
@@ -37,30 +43,127 @@ object BucketedParquet {
     * collect is metadata-sized regardless of batch size. */
   def touchedBuckets(df: DataFrame, keyCols: Seq[String],
       numBuckets: Int): Seq[Int] =
-    df.select(bucketOf(keyCols, numBuckets).as(B)).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
+    bucketIds(df.select(bucketOf(keyCols, numBuckets).as(B)))
+
+  private def bucketIds(df: DataFrame): Seq[Int] =
+    df.select(col(B)).distinct().collect().map(_.getInt(0)).toSeq.sorted
 
   /** Whole-table read. mergeSchema because buckets written in
     * different eras may carry different column sets (a batch with new
     * columns only rewrites the buckets it touches). */
-  def readAll(spark: SparkSession, dir: String): Option[DataFrame] = {
+  def readAll(spark: SparkSession, dir: String): Option[DataFrame] =
+    scan(spark, dir).map(_.drop(B))
+
+  /** Read only the given buckets — partition pruning keeps the scan
+    * off the untouched N−k directories. Rows keep their stored bucket
+    * id [[B]]. */
+  private def readBuckets(spark: SparkSession, dir: String,
+      buckets: Seq[Int]): Option[DataFrame] =
+    scan(spark, dir).map(_.filter(inBuckets(buckets)))
+
+  private def scan(spark: SparkSession, dir: String): Option[DataFrame] = {
     recover(dir)
     if (exists(dir))
-      Some(spark.read.option("mergeSchema", "true").parquet(dir).drop(B))
+      Some(spark.read.option("mergeSchema", "true").parquet(dir))
     else None
   }
 
-  /** Read only the given buckets — partition pruning keeps the scan
-    * off the untouched N−k directories. `keepBucket` retains the
-    * stored bucket id for writers that must preserve the layout. */
-  def readBuckets(spark: SparkSession, dir: String, touched: Seq[Int],
-      keepBucket: Boolean = false): Option[DataFrame] = {
-    recover(dir)
-    if (!exists(dir)) None
-    else {
-      val pruned = spark.read.option("mergeSchema", "true").parquet(dir)
-        .filter(col(B).isin(touched.map(Integer.valueOf): _*))
-      Some(if (keepBucket) pruned else pruned.drop(B))
+  private def inBuckets(ids: Seq[Int]): Column =
+    col(B).isin(ids.map(Integer.valueOf): _*)
+
+  /** Last-writer-wins within a batch: keep the LAST row per key, the
+    * order a sequential bulk-API / UNWIND application would leave.
+    * max_by hash-agg — one shuffle, no per-key sort. */
+  private def dedupLastWins(batch: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val props = batch.columns.filterNot(keyCols.contains).toSeq
+    if (props.isEmpty) batch.dropDuplicates(keyCols)
+    else batch.withColumn("__ord", monotonically_increasing_id())
+      .groupBy(keyCols.map(col): _*)
+      .agg(max_by(struct(props.map(col): _*), col("__ord")).as("__s"))
+      .select(keyCols.map(col) ++ props.map(c => col(s"__s.$c").as(c)): _*)
+  }
+
+  /** Keyed read-modify-write: dedup `batch` last-wins on `keyCols`,
+    * read only the buckets it touches, write `combine(stored, deduped)`
+    * back into exactly those buckets. `stored` is None for a new table.
+    * The deduped batch is persisted for its two evaluations (touched
+    * collect + combine) and released before returning. */
+  def merge(dir: String, keyCols: Seq[String], batch: DataFrame,
+      numBuckets: Int)(
+      combine: (Option[DataFrame], DataFrame) => DataFrame): Unit = {
+    val deduped = dedupLastWins(batch, keyCols).persist()
+    try {
+      val n = layoutBuckets(dir, numBuckets)
+      val touched = touchedBuckets(deduped, keyCols, n)
+      if (touched.nonEmpty) rewrite(dir, keyCols, n, touched, deduped)(combine)
+    } finally deduped.unpersist()
+  }
+
+  private def rewrite(dir: String, keyCols: Seq[String], n: Int,
+      touched: Seq[Int], rows: DataFrame)(
+      combine: (Option[DataFrame], DataFrame) => DataFrame): Unit = {
+    val stored = readBuckets(rows.sparkSession, dir, touched).map(_.drop(B))
+    val merged = combine(stored, rows)
+    writeBuckets(dir, merged.withColumn(B, bucketOf(keyCols, n)), touched,
+      keyCols, n)
+  }
+
+  /** The stored key values among `candidates`' buckets — the
+    * membership probe behind es.exists-style gates. Only the buckets
+    * the candidate keys hash into are read, never the whole table. */
+  def storedKeys(dir: String, keyCols: Seq[String], candidates: DataFrame,
+      numBuckets: Int): DataFrame = {
+    val keys = candidates.select(keyCols.map(col): _*)
+    val buckets =
+      touchedBuckets(keys, keyCols, layoutBuckets(dir, numBuckets))
+    readBuckets(keys.sparkSession, dir, buckets)
+      .fold(keys.limit(0))(_.select(keyCols.map(col): _*))
+  }
+
+  /** Insert ONLY batch rows whose key is not stored yet (the
+    * `es.exists` guard; stored rows are never overwritten). Returns
+    * the inserted rows, pinned with a localCheckpoint because callers
+    * consume them AFTER the swap has replaced the files the anti-join
+    * read. The anti-join reads the batch's buckets, but only buckets
+    * RECEIVING a novel row are rewritten: a batch that is 99% already
+    * stored leaves that 99%'s buckets untouched on disk. */
+  def insertNew(dir: String, keyCols: Seq[String], batch: DataFrame,
+      numBuckets: Int): DataFrame = {
+    val deduped = dedupLastWins(batch, keyCols)
+    val n = layoutBuckets(dir, numBuckets)
+    val fresh = deduped
+      .join(storedKeys(dir, keyCols, deduped, n), keyCols, "left_anti")
+      .localCheckpoint(true)
+    val touched = touchedBuckets(fresh, keyCols, n)
+    if (touched.nonEmpty) rewrite(dir, keyCols, n, touched, fresh) {
+      case (None, f) => f
+      case (Some(stored), f) =>
+        stored.unionByName(f, allowMissingColumns = true)
+    }
+    fresh
+  }
+
+  /** Delete-by-key: remove stored rows whose `matchCols` appear in
+    * `keys`, rewriting ONLY buckets that actually lose a row — a
+    * replayed tombstone or drain is a byte-level no-op. Candidate
+    * buckets come from the keys when the table is laid out by exactly
+    * `matchCols`; otherwise (e.g. an edge deleted by a SUBSET of its
+    * identity) every bucket is a candidate and the key-column-pruned
+    * semi-join scan finds the hit ones. Surviving rows keep their
+    * STORED bucket. `keys` is evaluated several times, across the swap:
+    * pass a materialized key set. */
+  def deleteKeys(dir: String, matchCols: Seq[String], keys: DataFrame,
+      numBuckets: Int): Unit = {
+    val n = layoutBuckets(dir, numBuckets)
+    val candidate =
+      if (layoutKey(dir).contains(matchCols)) touchedBuckets(keys, matchCols, n)
+      else 0 until n
+    if (candidate.isEmpty) return
+    readBuckets(keys.sparkSession, dir, candidate).foreach { stored =>
+      val hit = bucketIds(stored.join(keys, matchCols, "left_semi"))
+      if (hit.nonEmpty)
+        writeBuckets(dir, stored.filter(inBuckets(hit))
+          .join(keys, matchCols, "left_anti"), hit, matchCols, n)
     }
   }
 
@@ -77,7 +180,7 @@ object BucketedParquet {
     * rows, so "missing" can never mean "legitimately empty").
     * Idempotent, crash-safe to re-crash inside, and a no-op without a
     * journal — called from every read/write entry point. */
-  def recover(dir: String): Unit = {
+  private def recover(dir: String): Unit = {
     val j = journalPath(dir)
     if (!Files.exists(j)) return
     val staging = dir + ".staging"
@@ -105,7 +208,7 @@ object BucketedParquet {
   /** The key columns this table's buckets were laid out by (persisted
     * at first write so later callers can tell compute-pruning from
     * scan-discovery). */
-  def layoutKey(dir: String): Option[Seq[String]] = {
+  private def layoutKey(dir: String): Option[Seq[String]] = {
     val p = Paths.get(s"$dir/_BUCKET_KEY")
     if (Files.exists(p)) Some(Files.readString(p).split(",").toSeq) else None
   }
@@ -114,15 +217,15 @@ object BucketedParquet {
     * write and AUTHORITATIVE from then on: a caller reopening the
     * store with a different `numBuckets` would otherwise compute wrong
     * touched sets and merge against the wrong directories. */
-  def layoutBuckets(dir: String, default: Int): Int = {
+  private def layoutBuckets(dir: String, default: Int): Int = {
     val p = Paths.get(s"$dir/_NUM_BUCKETS")
     if (Files.exists(p)) Files.readString(p).trim.toInt else default
   }
 
   /** Stage the touched buckets, then swap ONLY their directories in.
     * `rows` must carry the bucket-id column [[B]]. */
-  def writeBuckets(dir: String, rows: DataFrame, touched: Seq[Int],
-      markerKey: Seq[String], numBuckets: Int = -1): Unit = {
+  private def writeBuckets(dir: String, rows: DataFrame, touched: Seq[Int],
+      markerKey: Seq[String], numBuckets: Int): Unit = {
     recover(dir)
     val staging = dir + ".staging"
     rows.repartition(col(B))
@@ -131,9 +234,7 @@ object BucketedParquet {
       Files.move(Paths.get(staging), Paths.get(dir))
       Files.writeString(Paths.get(s"$dir/_BUCKET_KEY"),
         markerKey.mkString(","))
-      if (numBuckets > 0)
-        Files.writeString(Paths.get(s"$dir/_NUM_BUCKETS"),
-          numBuckets.toString)
+      Files.writeString(Paths.get(s"$dir/_NUM_BUCKETS"), numBuckets.toString)
       return
     }
     // Spark writes no partition dir for an empty bucket; materialize an
@@ -149,21 +250,10 @@ object BucketedParquet {
     // crash inside the move loop rolls FORWARD on next open instead of
     // leaving silently-missing buckets (see recover)
     Files.writeString(journalPath(dir), touched.mkString(","))
-    val trash = Paths.get(dir + ".trash")
-    if (Files.exists(trash)) deleteTree(trash)
-    Files.createDirectories(trash)
-    touched.foreach { k =>
-      val live = Paths.get(s"$dir/$B=$k")
-      val staged = Paths.get(s"$staging/$B=$k")
-      if (Files.exists(live)) Files.move(live, trash.resolve(s"$B=$k"))
-      // every touched bucket has a staged dir (empty if zero surviving
-      // rows — an empty live dir reads as zero rows); the exists check
-      // only guards re-entry after a recover already moved it
-      if (Files.exists(staged)) Files.move(staged, live)
-    }
-    deleteTree(Paths.get(staging))
-    deleteTree(trash)
-    Files.delete(journalPath(dir))
+    // the swap IS the roll-forward: every touched bucket's staged dir
+    // (empty if zero surviving rows — an empty live dir reads as zero
+    // rows) replaces its live dir exactly as a recovering reader would
+    recover(dir)
   }
 
   def deleteTree(p: Path): Unit =

@@ -3,7 +3,6 @@ package graft.io
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.io.BucketedParquet.B
 
 /** Keyed document store over Parquet with the reference's two ES write
   * modes (SURVEY K1/K2):
@@ -39,50 +38,12 @@ final class DocStore(spark: SparkSession, baseDir: String,
     * only the buckets the candidate keys hash into are read, never the
     * whole index. */
   def storedKeys(indexName: String, key: String,
-      candidates: DataFrame): DataFrame = {
-    val n = BucketedParquet.layoutBuckets(dir(indexName), numBuckets)
-    val buckets = BucketedParquet.touchedBuckets(
-      candidates.select(col(key)), Seq(key), n)
-    BucketedParquet.readBuckets(spark, dir(indexName), buckets) match {
-      case None => candidates.select(col(key)).limit(0)
-      case Some(stored) => stored.select(col(key))
-    }
-  }
-
-  private def dedupLastWins(batch: DataFrame, key: String): DataFrame = {
-    // max_by hash-agg (no per-key sort): keep the LAST row per key,
-    // matching sequential bulk-API application order
-    val props = batch.columns.filterNot(_ == key).toSeq
-    if (props.isEmpty) batch.dropDuplicates(key)
-    else batch.withColumn("__ord", monotonically_increasing_id())
-      .groupBy(col(key))
-      .agg(max_by(struct(props.map(col): _*), col("__ord")).as("__s"))
-      .select(col(key) +: props.map(c => col(s"__s.$c").as(c)): _*)
-  }
-
-  /** Merge `deduped` into the touched buckets of `index` with
-    * `combine(old, deduped)` and swap only those buckets in. The
-    * deduped batch is persisted for its two evaluations (touched
-    * collect + merge) and released before returning. */
-  private def mergeTouched(index: String, key: String, deduped0: DataFrame)(
-      combine: (Option[DataFrame], DataFrame) => DataFrame): Unit = {
-    val deduped = deduped0.persist()
-    // the stored layout's bucket count is authoritative over the
-    // constructor default once the index exists
-    val n = BucketedParquet.layoutBuckets(dir(index), numBuckets)
-    val touched = BucketedParquet.touchedBuckets(deduped, Seq(key), n)
-    if (touched.isEmpty) { deduped.unpersist(); return }
-    val old = BucketedParquet.readBuckets(spark, dir(index), touched)
-    val merged = combine(old, deduped)
-    BucketedParquet.writeBuckets(dir(index),
-      merged.withColumn(B, BucketedParquet.bucketOf(Seq(key), n)),
-      touched, markerKey = Seq(key), numBuckets = n)
-    deduped.unpersist()
-  }
+      candidates: DataFrame): DataFrame =
+    BucketedParquet.storedKeys(dir(indexName), Seq(key), candidates, numBuckets)
 
   /** K1: overwrite-by-id. */
   def index(indexName: String, key: String, batch: DataFrame): Unit =
-    mergeTouched(indexName, key, dedupLastWins(batch, key)) {
+    BucketedParquet.merge(dir(indexName), Seq(key), batch, numBuckets) {
       case (None, deduped) => deduped
       case (Some(old), deduped) =>
         old.join(deduped.select(col(key)), Seq(key), "left_anti")
@@ -92,75 +53,23 @@ final class DocStore(spark: SparkSession, baseDir: String,
   /** The reference's `es.exists` guard as a set operation: index ONLY
     * batch rows whose key is not already stored (parents immutable
     * once indexed — the lobbying ingest pattern). Returns the
-    * actually-inserted rows, pinned with a localCheckpoint because the
-    * caller consumes them AFTER the swap has replaced the files the
-    * anti-join read. The anti-join only ever needs the batch's OWN
-    * buckets — collisions cannot live elsewhere. */
-  def insertNew(indexName: String, key: String, batch: DataFrame): DataFrame = {
-    val deduped = dedupLastWins(batch, key)
-    // the anti-join reads the whole BATCH's buckets, but only buckets
-    // actually RECEIVING a novel row are rewritten — a stop-on-seen
-    // batch that is 99% already-stored leaves the stale 99%'s buckets
-    // untouched on disk
-    val n = BucketedParquet.layoutBuckets(dir(indexName), numBuckets)
-    val batchBuckets =
-      BucketedParquet.touchedBuckets(deduped, Seq(key), n)
-    if (batchBuckets.isEmpty) return deduped.limit(0).localCheckpoint(true)
-    val seen = BucketedParquet.readBuckets(spark, dir(indexName), batchBuckets)
-    val fresh = (seen match {
-      case None => deduped
-      case Some(o) => deduped.join(o.select(col(key)), Seq(key), "left_anti")
-    }).localCheckpoint(true)
-    val touched = BucketedParquet.touchedBuckets(fresh, Seq(key), n)
-    if (touched.isEmpty) return fresh
-    val merged =
-      BucketedParquet.readBuckets(spark, dir(indexName), touched) match {
-        case None => fresh
-        case Some(o) => o.unionByName(fresh, allowMissingColumns = true)
-      }
-    BucketedParquet.writeBuckets(dir(indexName),
-      merged.withColumn(B, BucketedParquet.bucketOf(Seq(key), n)),
-      touched, markerKey = Seq(key), numBuckets = n)
-    fresh
-  }
+    * actually-inserted rows; see [[BucketedParquet.insertNew]]. */
+  def insertNew(indexName: String, key: String, batch: DataFrame): DataFrame =
+    BucketedParquet.insertNew(dir(indexName), Seq(key), batch, numBuckets)
 
   /** Delete-by-key — the `es.delete` drain of a deletion queue
     * (`news_articles_ingest_delete_duplicate/main.py:30-37`): remove
-    * stored rows whose key appears in `ids`. Only the buckets holding
-    * deleted keys are read and rewritten; the other bucket files stay
-    * byte-identical (the [[graft.graph.GraphStore.detachDelete]]
-    * pattern). */
-  def delete(indexName: String, key: String, ids: DataFrame): Unit = {
-    val d = dir(indexName)
-    if (!BucketedParquet.exists(d)) return
-    // materialized once: reused for the touched collect + joins, and
-    // callers commonly derive `ids` from THIS index's files, which
-    // the swap below replaces
-    val keysD = ids.select(col(key)).distinct().localCheckpoint(true)
-    val n = BucketedParquet.layoutBuckets(d, numBuckets)
-    val candidate = BucketedParquet.touchedBuckets(keysD, Seq(key), n)
-    if (candidate.isEmpty) return
-    BucketedParquet.readBuckets(spark, d, candidate, keepBucket = true)
-      .foreach { old =>
-        // rewrite ONLY buckets that actually LOSE a row (the insertNew
-        // refinement): a replayed/no-op drain whose keys are already
-        // gone must not rewrite byte-identical buckets
-        val hit = old.join(keysD, Seq(key), "left_semi")
-          .select(col(BucketedParquet.B)).distinct()
-          .collect().map(_.getInt(0)).toSeq.sorted
-        if (hit.nonEmpty) {
-          val kept = old
-            .filter(col(BucketedParquet.B).isin(hit.map(Integer.valueOf): _*))
-            .join(keysD, Seq(key), "left_anti")
-          BucketedParquet.writeBuckets(d, kept, hit,
-            markerKey = Seq(key), numBuckets = n)
-        }
-      }
-  }
+    * stored rows whose key appears in `ids`. Only buckets that lose a
+    * row are rewritten; see [[BucketedParquet.deleteKeys]]. The ids are
+    * materialized first because callers commonly derive them from THIS
+    * index's files, which the swap replaces. */
+  def delete(indexName: String, key: String, ids: DataFrame): Unit =
+    BucketedParquet.deleteKeys(dir(indexName), Seq(key),
+      ids.select(col(key)).distinct().localCheckpoint(true), numBuckets)
 
   /** K2: doc_as_upsert partial merge; see class doc. */
   def upsert(indexName: String, key: String, batch: DataFrame): Unit =
-    mergeTouched(indexName, key, dedupLastWins(batch, key)) {
+    BucketedParquet.merge(dir(indexName), Seq(key), batch, numBuckets) {
       case (None, deduped) => deduped
       case (Some(old), deduped) =>
         val newCols = deduped.columns.filterNot(_ == key).toSeq

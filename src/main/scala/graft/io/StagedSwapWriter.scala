@@ -1,8 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** S6: truncate-load with archive and row-count rollback
   * (`federal_fec_ingest_import_bigquery/main.py:367-403`).
@@ -18,32 +17,27 @@ object StagedSwapWriter {
 
   final case class Result(swapped: Boolean, oldCount: Long, newCount: Long)
 
-  private def rmTree(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-
   /** Truncate-load `df` into `tableDir` with the rowcount gate. */
   def truncateLoad(spark: SparkSession, df: DataFrame,
       tableDir: String): Result = {
     val table = Paths.get(tableDir)
     val staging = Paths.get(tableDir + ".staging")
     val archive = Paths.get(tableDir + ".old")
-    rmTree(staging)
+    BucketedParquet.deleteTree(staging)
     df.write.mode("overwrite").parquet(staging.toString)
     val newCount = spark.read.parquet(staging.toString).count()
     val oldCount =
       if (Files.exists(table)) spark.read.parquet(table.toString).count()
       else -1L
     if (oldCount >= 0 && newCount < oldCount) {
-      rmTree(staging) // validation failed: keep the old table
+      BucketedParquet.deleteTree(staging) // validation failed: keep the old table
       Result(swapped = false, oldCount, newCount)
     } else {
-      rmTree(archive)
+      BucketedParquet.deleteTree(archive)
       if (Files.exists(table))
         Files.move(table, archive, StandardCopyOption.ATOMIC_MOVE)
       Files.move(staging, table, StandardCopyOption.ATOMIC_MOVE)
-      rmTree(archive)
+      BucketedParquet.deleteTree(archive)
       Result(swapped = true, math.max(oldCount, 0L), newCount)
     }
   }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamReader, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming restatement of the reference's incremental
@@ -28,19 +28,9 @@ object IncrementalPipeline {
       checkpointDir: String,
       transform: DataFrame => DataFrame,
       sink: (DataFrame, Long) => Unit,
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val reader = spark.readStream.schema(schema)
-    val withOpt = maxFilesPerTrigger
-      .map(n => reader.option("maxFilesPerTrigger", n)).getOrElse(reader)
-    val stream = withOpt.parquet(srcDir)
-    val q = transform(stream).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("update")
-      .foreachBatch { (df: DataFrame, id: Long) => sink(df, id) }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    drain(spark.readStream.format("parquet").schema(schema), srcDir,
+      checkpointDir, transform, sink, maxFilesPerTrigger)
 
   /** The STREAMING media intake: the same file-arrival incremental
     * loop over Spark's `binaryFile` source — new assets landing in a
@@ -62,10 +52,21 @@ object IncrementalPipeline {
       StructField("modificationTime", TimestampType),
       StructField("length", LongType),
       StructField("content", BinaryType)))
-    val reader = spark.readStream.format("binaryFile").schema(binarySchema)
-    val withOpt = maxFilesPerTrigger
-      .map(n => reader.option("maxFilesPerTrigger", n)).getOrElse(reader)
-    val stream = withOpt.load(srcDir)
+    drain(spark.readStream.format("binaryFile").schema(binarySchema), srcDir,
+      checkpointDir, transform, sink, maxFilesPerTrigger)
+  }
+
+  /** The AvailableNow loop behind both sources: `reader` fixes the
+    * format and schema, the rest is shared. */
+  private def drain(
+      reader: DataStreamReader,
+      srcDir: String,
+      checkpointDir: String,
+      transform: DataFrame => DataFrame,
+      sink: (DataFrame, Long) => Unit,
+      maxFilesPerTrigger: Option[Int]): Unit = {
+    val stream = maxFilesPerTrigger
+      .fold(reader)(n => reader.option("maxFilesPerTrigger", n)).load(srcDir)
     val q = transform(stream).writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("update")

@@ -72,4 +72,15 @@ class FecDocsSpec extends SparkFunSuite {
       .filter($"doc_id" === 2).select("v").as[String].head()
     assert(v2 == "b")
   }
+
+  test("incremental load counts distinct docs: a repeated key stores once") {
+    val store = new DocStore(spark,
+      Files.createTempDirectory("docs3").toString)
+    val docs = Seq((1L, "a"), (1L, "a2"), (2L, "b")).toDF("doc_id", "v")
+    assert(FecDocs.loadIncremental(store, "contributions", docs) == 2)
+    val stored = store.read("contributions").get
+    assert(stored.count() == 2)
+    // last writer wins inside the batch
+    assert(stored.filter($"doc_id" === 1).select("v").as[String].head() == "a2")
+  }
 }

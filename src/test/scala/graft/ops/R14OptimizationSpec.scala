@@ -55,8 +55,6 @@ class R14OptimizationSpec extends SparkFunSuite {
     val target = spark.sparkContext.defaultParallelism
     val once = graft.Tables.spread(docs)
     val twice = graft.Tables.spread(docs.select(col("doc_id"))) // cache hit
-    assert(once.rdd.getNumPartitions >= math.min(target,
-      once.rdd.getNumPartitions))
     // the decision must match the uncached ground truth
     val raw = docs.rdd.getNumPartitions
     if (raw < target) {
