@@ -15,7 +15,7 @@ object JobProfile {
     val (sfDir, names) = (args(0), args(1).split(',').toSeq)
     val reps = if (args.length > 2) args(2).toInt else 1
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus) // same confs as Bench/Verify (r14)
+    val spark = Sessions.local(cpus) // same confs as Verify and perfbench
     spark.sparkContext.setLogLevel("ERROR")
 
     final case class StageRow(id: Int, name: String, nTasks: Int,

@@ -15,7 +15,7 @@ object PlanDump {
     val Array(sfDir, outDir, suffix, list) = args.take(4)
     val names = list.split(',').toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus) // same confs as Bench/Verify (r14)
+    val spark = Sessions.local(cpus) // same confs as Verify and perfbench
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     // dev-only plan subjects that are not catalog entries (e.g. the

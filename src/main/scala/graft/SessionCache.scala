@@ -22,11 +22,6 @@ import org.apache.spark.sql.SparkSession
   */
 final class SessionCache[V](onEvict: V => Unit = (_: V) => ()) {
 
-  // every instance is a module-level val; the registry lets the bench's
-  // cold-path witness (SPARK_GRAFT_COLD=1) evict EVERY memo between
-  // timed queries so warm-laundered index builds are measurable
-  SessionCache.register(this)
-
   // The map stores a MEMO CELL, not the built value: computeIfAbsent
   // must stay short (CHM holds the bin lock through the mapping
   // function, so building a cluster-scale index inside it would
@@ -72,21 +67,6 @@ final class SessionCache[V](onEvict: V => Unit = (_: V) => ()) {
     }
   }
 
-  /** Drop EVERY entry, running `onEvict` on built values — the bench's
-    * cold-path witness uses this (via [[SessionCache.evictAll]]) to
-    * force each timed query to rebuild its memoized indexes. Values
-    * still mid-build are skipped exactly like [[evictSiblings]]. */
-  private[graft] def evictAllEntries(): Unit = {
-    val it = m.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      it.remove()
-      e.getValue.valueIfComputed.foreach { v =>
-        try onEvict(v) catch { case _: Throwable => () }
-      }
-    }
-  }
-
   private def sweep(): Unit = {
     val it = m.entrySet().iterator()
     while (it.hasNext) {
@@ -98,18 +78,6 @@ final class SessionCache[V](onEvict: V => Unit = (_: V) => ()) {
 }
 
 object SessionCache {
-  // strong refs are fine: every SessionCache is a module-level val that
-  // lives for the JVM anyway; entries inside are swept per-session
-  private val registry =
-    new java.util.concurrent.ConcurrentLinkedQueue[SessionCache[_]]()
-
-  private def register(c: SessionCache[_]): Unit = registry.add(c)
-
-  /** Evict every entry of every cache in the JVM (onEvict runs on each
-    * built value). Used by the bench's cold-path witness so memoized
-    * index builds are charged to the queries that need them. */
-  def evictAll(): Unit = registry.forEach(_.evictAllEntries())
-
   // WeakHashMap keys by identity and drops collected sessions; the
   // UUID value makes the cache key genuinely unique per session
   // instance (Object.hashCode is neither)

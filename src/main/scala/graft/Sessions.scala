@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** The ONE local-mode session builder every main shares (r14 item 1).
   *
   * Round 13 delivered `spark.sql.files.openCostInBytes=128KB` only in
-  * the perf-harness sessions (Bench/TimeQuery/JobProfile/PlanDump) —
+  * the perf-harness sessions (TimeQuery/JobProfile/PlanDump) —
   * the verdict called that the wrong layer: a measured-path-only conf
   * is indistinguishable from a benchmark trick. The r14 quiet-host
   * A/B/A (BENCH_DETAIL `r14-ab-a1`=281.6 s @128KB, `r14-ab-b4m`=280.2 s
@@ -17,19 +17,15 @@ import org.apache.spark.sql.SparkSession
   * (q09 1.10→0.80 s, o15 3.17→1.74 s, graph_cooccur 2.04→1.06 s). So
   * the conf moves HERE, code-delivered to every entrypoint including
   * Verify — the correctness gate now runs the same scan-split sizing
-  * the bench measures.
+  * the benchmark measures.
   *
   * Scale posture (guide §6.1): with production-sized files
   * (128 MB–1 GB) `maxPartitionBytes` governs splits and the lowered
   * open cost is inert; it only stops the small-single-file under-split
   * (a 4 MB open cost floors maxSplitBytes at 4 MB, so an 11 MB table
-  * scans 3-wide regardless of cores). Env-overridable for A/B
-  * (`SPARK_GRAFT_OPEN_COST`), default 128 KB.
+  * scans 3-wide regardless of cores).
   */
 object Sessions {
-
-  def openCost: String =
-    sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "131072")
 
   /** Standard local session for the graft mains: `local[cpus]` master,
     * shuffle width = cpus, AQE on, UTC, UI off, shared scan-split
@@ -43,7 +39,7 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.openCostInBytes", openCost)
+      .config("spark.sql.files.openCostInBytes", "131072")
       .getOrCreate()
     s
   }

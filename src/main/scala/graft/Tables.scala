@@ -40,8 +40,8 @@ object Tables {
     * isAdjustedToUTC=false (Spark reads TIMESTAMP_NTZ), and plain
     * UTC-adjusted micros. Normalize all three to a microsecond
     * TimestampType `ts` so every downstream operator sees one type.
-    * The session timezone is pinned to UTC everywhere (Graft/Bench/
-    * Verify/tests), so the NTZ→LTZ cast is value-preserving and
+    * The session timezone is pinned to UTC everywhere (Graft/Sessions/
+    * tests), so the NTZ→LTZ cast is value-preserving and
     * matches DuckDB's naive-TIMESTAMP reading of the same file. */
   private def loadEvents(spark: SparkSession, sfDir: String): DataFrame = {
     // the conf is set BEFORE the first (schema-inferring) read of this

@@ -2,7 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * Exits 1 when any query fails, after every other result is written. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -10,22 +11,37 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shared builder (r14 item 1): Verify now runs the SAME session
-    // confs the bench measures — incl. the scan-split sizing that was
-    // perf-harness-only in r13 (the verdict's "wrong layer" call). The
-    // full oracle gate was re-run green under it in the same commit.
+    // Sessions.local (r14 item 1): Verify runs the SAME session confs
+    // as every other entrypoint — incl. the scan-split sizing that was
+    // perf-harness-only in r13 (the verdict's "wrong layer" call).
     val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failed = try run(spark, sfDir, outDir, only) finally spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} failed: ${failed.mkString(",")}")
+      sys.exit(1)
     }
+  }
+
+  /** Write each selected query's result to `outDir/<name>` and the
+    * oracle SQL of the whole catalog to `outDir/oracle_sql.json`; a
+    * failing query is reported and skipped. Returns the failed names. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      only: Option[Set[String]]): Seq[String] = {
+    new java.io.File(outDir).mkdirs()
+    val failed = SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
+      }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -41,6 +57,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    failed
   }
 }

@@ -269,14 +269,13 @@ object FecGraph {
       donorVertices(elastic))
     store.mergeVertices("Day", Seq("year", "month", "day"),
       dayVertices(elastic))
+    val contributed = contributedToEdges(elastic)
     store.mergeEdges("CONTRIBUTED_TO_IN", Seq("src_label", "src_key", "sub_id"),
-      contributedToEdges(elastic).select(col("src_label"), col("src_key"),
-        col("sub_id")))
+      contributed.select(col("src_label"), col("src_key"), col("sub_id")))
     store.mergeEdges("CONTRIBUTED_TO_OUT", Seq("sub_id", "target"),
-      contributedToEdges(elastic).select(col("sub_id"), col("target")))
+      contributed.select(col("sub_id"), col("target")))
     store.mergeEdges("CONTRIBUTED_TO", Seq("src_label", "src_key", "target"),
-      contributedToEdges(elastic).select(col("src_label"), col("src_key"),
-        col("target")))
+      contributed.select(col("src_label"), col("src_key"), col("target")))
     store.mergeEdges("HAPPENED_ON", Seq("sub_id", "year", "month", "day"),
       happenedOnEdges(elastic))
     store.mergeEdges("DONOR_EMPLOYER", Seq("name", "zip_code", "employer"),

@@ -1,6 +1,6 @@
 package graft.fec
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.types._
 
 /** FEC bulk-table schema registry + readers (SURVEY §1.1, S3-S5).
@@ -163,11 +163,7 @@ object FecSchemas {
   /** S3: pipe-delimited unquoted text scan (no header). */
   def readPipeText(spark: SparkSession, schema: StructType,
       path: String): DataFrame =
-    spark.read.schema(schema)
-      .option("delimiter", "|")
-      .option("quote", "")
-      .option("header", "false")
-      .csv(path)
+    pipeText(spark.read.schema(schema)).csv(path)
 
   /** S4: quoted CSV with one header row. */
   def readCsv(spark: SparkSession, schema: StructType,
@@ -180,43 +176,25 @@ object FecSchemas {
   /** S5 dispatcher: route a bulk file to its schema+format by table
     * name; `.txt` → pipe text, else headered CSV. */
   def readBulkFile(spark: SparkSession, table: String,
-      path: String): DataFrame = {
-    val schema = registry.getOrElse(table,
-      throw new IllegalArgumentException(s"unexpected file: $table"))
-    if (path.endsWith(".txt")) readPipeText(spark, schema, path)
-    else readCsv(spark, schema, path)
-  }
+      path: String): DataFrame =
+    if (path.endsWith(".txt")) readPipeText(spark, schemaOf(table), path)
+    else readCsv(spark, schemaOf(table), path)
 
   /** The quarantined pipe-text scan over an in-memory line Dataset —
-    * the same parser options as [[readBulkFileQuarantined]]'s `.txt`
-    * branch (delimiter `|`, quoting disabled, no header, PERMISSIVE
-    * with a `_corrupt_record` column) applied to lines that arrive as
-    * a Dataset instead of files: the shape a streaming intake or a
-    * fixture synthesizer produces. Returns (clean rows, quarantined
-    * raw lines, the CACHED parse they both read) — the input is
-    * scanned once for both sides, and the caller unpersists the third
-    * element once its counts are materialized (a catalog row that
-    * re-runs per bench pass must not accumulate dead cached
-    * relations). */
+    * the same parser as [[readBulkFileQuarantined]]'s `.txt` branch
+    * applied to lines that arrive as a Dataset instead of files: the
+    * shape a streaming intake or a fixture synthesizer produces.
+    * Returns (clean rows, quarantined raw lines, the CACHED parse they
+    * both read) — the input is scanned once for both sides, and the
+    * caller unpersists the third element once its counts are
+    * materialized (a catalog row that re-runs per pass must not
+    * accumulate dead cached relations). */
   def readPipeTextLinesQuarantined(spark: SparkSession, table: String,
       lines: org.apache.spark.sql.Dataset[String])
       : (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions.col
-    val schema = registry.getOrElse(table,
-      throw new IllegalArgumentException(s"unexpected file: $table"))
-    val withCorrupt = StructType(schema.fields :+
-      StructField("_corrupt_record", StringType, nullable = true))
-    val cached = spark.read.schema(withCorrupt)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .option("delimiter", "|").option("quote", "")
-      .option("header", "false")
-      .csv(lines)
-      .cache()
-    (cached.filter(col("_corrupt_record").isNull).drop("_corrupt_record"),
-      cached.filter(col("_corrupt_record").isNotNull)
-        .select(col("_corrupt_record")),
-      cached)
+    val cached = pipeText(quarantining(spark, table)).csv(lines).cache()
+    val (clean, bad) = splitQuarantine(cached)
+    (clean, bad, cached)
   }
 
   /** Lenient variant for dirty feeds at scale: malformed rows land in a
@@ -226,22 +204,37 @@ object FecSchemas {
     * (clean rows, quarantined raw lines). */
   def readBulkFileQuarantined(spark: SparkSession, table: String,
       path: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions.col
-    val schema = registry.getOrElse(table,
+    val reader = quarantining(spark, table)
+    val df =
+      if (path.endsWith(".txt")) pipeText(reader).csv(path)
+      else reader.option("header", "true").option("quote", "\"").csv(path)
+    splitQuarantine(df.cache())
+  }
+
+  private def schemaOf(table: String): StructType =
+    registry.getOrElse(table,
       throw new IllegalArgumentException(s"unexpected file: $table"))
-    val withCorrupt = StructType(schema.fields :+
-      StructField("_corrupt_record", StringType, nullable = true))
-    val reader = spark.read.schema(withCorrupt)
+
+  /** The one pipe-text parser setup: delimiter `|`, quoting off, no
+    * header (`main.py:27-30`). */
+  private def pipeText(reader: DataFrameReader): DataFrameReader =
+    reader.option("delimiter", "|").option("quote", "")
+      .option("header", "false")
+
+  /** A PERMISSIVE reader over `table`'s schema plus a `_corrupt_record`
+    * column that receives each malformed raw line. */
+  private def quarantining(spark: SparkSession,
+      table: String): DataFrameReader =
+    spark.read
+      .schema(StructType(schemaOf(table).fields :+
+        StructField("_corrupt_record", StringType, nullable = true)))
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
-    val df =
-      if (path.endsWith(".txt"))
-        reader.option("delimiter", "|").option("quote", "")
-          .option("header", "false").csv(path)
-      else reader.option("header", "true").option("quote", "\"").csv(path)
-    val cached = df.cache()
-    (cached.filter(col("_corrupt_record").isNull).drop("_corrupt_record"),
-      cached.filter(col("_corrupt_record").isNotNull)
-        .select(col("_corrupt_record")))
+
+  /** (clean rows, quarantined raw lines) of a quarantining parse. */
+  private def splitQuarantine(parsed: DataFrame): (DataFrame, DataFrame) = {
+    val bad = org.apache.spark.sql.functions.col("_corrupt_record")
+    (parsed.filter(bad.isNull).drop("_corrupt_record"),
+      parsed.filter(bad.isNotNull).select(bad))
   }
 }

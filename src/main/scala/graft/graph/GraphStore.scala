@@ -86,7 +86,7 @@ final class GraphStore(spark: SparkSession, baseDir: String,
   def mergeVertices(label: String, keyCols: Seq[String],
       batch: DataFrame): Unit =
     mergeInto(vertexDir(label), keyCols,
-      batch.withColumn("uuid", lit(null).cast("string")).drop("uuid"),
+      batch.drop("uuid"),
       keyUuid(keyCols, "v", label))
 
   /** MERGE an edge batch; identity = the endpoint keys (+ any identity

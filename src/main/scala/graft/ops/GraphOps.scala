@@ -709,8 +709,7 @@ object GraphOps {
     * rebuilt on every call — profiled ~2 s of graph_cc's 5.5 s;
     * the label-propagation LOOP itself still runs per call). */
   // onEvict keeps the cache contract uniform with csCache/hitsIndex
-  // (r13 ADVICE); localCheckpoint blocks additionally fall to the
-  // bench cold sweep's getPersistentRDDs pass
+  // (r13 ADVICE)
   private val ccIndexCache =
     new graft.SessionCache[(DataFrame, DataFrame)](v => {
       v._1.unpersist(); v._2.unpersist(); ()

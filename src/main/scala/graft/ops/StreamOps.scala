@@ -60,7 +60,7 @@ object StreamOps {
 
     // the two-wave streaming replay through the REAL engine; the
     // source dir + checkpoint are per-invocation scratch and must not
-    // accumulate across the bench's warm-up/timed/heal re-runs —
+    // accumulate across repeated runs of the query (warm-up, timed) —
     // deleted in the finally once the sink map is drained
     val tmpPath = java.nio.file.Files
       .createTempDirectory("funnel_stream_eq")

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Round-10 pins: the hub-degree cap in front of graphComponents'
   * edges² (the one scale guard round 9 acknowledged but deferred),
   * the two new plan-census rows, the layoutBucketing write memo, the
-  * shared tokenized-corpus artifact, and the Bench run-level drift
-  * check. */
+  * shared tokenized-corpus artifact, and malformed-container
+  * rejection. */
 class Round10OpsSpec extends SparkFunSuite {
   import spark.implicits._
 
@@ -122,28 +122,6 @@ class Round10OpsSpec extends SparkFunSuite {
     assert(joined.filter(not(col("a") <=> col("b"))).count() == 0)
     // and the memo IS shared: same instance on re-request
     assert(TextOps.tokCorpus(spark, sfDir) eq memo)
-  }
-
-  // ---- Bench run-level drift ----------------------------------------
-
-  test("runLevelDrift: a broad +40% band flags with zero 10x queries") {
-    val medians = (1 to 30).map(i => s"q$i" -> 1.0).toMap
-    val drifted = (1 to 30).map(i => s"q$i" -> 1.4)
-    val (flag, tot, med) = graft.Bench.runLevelDrift(drifted, medians)
-    assert(flag, "the sub-10x blind spot is still open")
-    assert(math.abs(tot - 42.0) < 1e-9 && math.abs(med - 30.0) < 1e-9)
-  }
-
-  test("runLevelDrift: a clean run and a thin history do not flag") {
-    val medians = (1 to 30).map(i => s"q$i" -> 1.0).toMap
-    val clean = (1 to 30).map(i => s"q$i" -> 1.1)
-    assert(!graft.Bench.runLevelDrift(clean, medians)._1)
-    // one 10x spike in an otherwise-clean run: per-query trigger's
-    // job, not the run-level one (total 39.8 > 1.25*30 would flag —
-    // use a smaller spike)
-    val thin = (1 to 10).map(i => s"q$i" -> 2.0)
-    assert(!graft.Bench.runLevelDrift(thin, medians)._1,
-      "under 20 common queries must never flag")
   }
 
   // ---- malformed-container rejection (ADVICE fixes) ------------------

@@ -215,27 +215,6 @@ class Round11OpsSpec extends SparkFunSuite {
     assert(graft.multimodal.Dctv.parse(null).isEmpty)
   }
 
-  test("bench history: drift medians come from same-host lines only " +
-    "(a judge-host run must not flag against builder-host history)") {
-    def line(fp: Option[String], q: Double): String = {
-      val fpField = fp.map(v => s""""host_fp":"$v",""").getOrElse("")
-      s"""{"metric":"total","sf":"/sf","contaminated":false,$fpField"queries":{"q1":$q}}"""
-    }
-    val lines = Seq(
-      line(Some("hostA/32"), 1.0), line(Some("hostA/32"), 1.2),
-      line(Some("hostB/32"), 9.0), // the other host's truth
-      line(None, 7.0))             // legacy pre-fingerprint line
-    val a = graft.Bench.priorQueryTimes(lines, "/sf", "hostA/32")
-    assert(a("q1").sorted == Seq(1.0, 1.2),
-      "cross-host or legacy lines leaked into the medians")
-    val b = graft.Bench.priorQueryTimes(lines, "/sf", "hostB/32")
-    assert(b("q1") == Seq(9.0))
-    // a host with no history yields no medians -> runLevelDrift stays
-    // quiet instead of flagging against another host's baseline
-    assert(graft.Bench.priorQueryTimes(lines, "/sf", "hostC/32").isEmpty)
-    assert(graft.Bench.hostFingerprint(32).endsWith("/32"))
-  }
-
   test("plan census: a deliberate config change yields the diagnosable " +
     "CONFIG MISMATCH signal, not a silent literal-oracle hash fail") {
     // an ISOLATED session: suites share one SparkSession and run
