@@ -1,8 +1,9 @@
 package graft.fec
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import graft.graph.GraphStore
 import graft.io.DocStore
+import graft.streaming.IncrementalPipeline
 import java.nio.file.{Files, Paths}
 
 /** The flagship FEC DAG (SURVEY §3.1) as ONE user call — what the
@@ -14,10 +15,16 @@ import java.nio.file.{Files, Paths}
   *
   * Every stage is the same pure DataFrame function the specs exercise
   * individually; this object only wires them, so running the pipeline
-  * end-to-end inherits each stage's tested semantics. The incremental
-  * doc load is [[FecDocs.loadIncremental]] (a bucket-pruned
-  * insert-only [[graft.io.DocStore.insertNew]]); the checkpoint-based
-  * streaming variant is [[graft.streaming.IncrementalPipeline]].
+  * end-to-end inherits each stage's tested semantics. Two entrypoints
+  * share the contribution path (master → elastic view → doc upsert →
+  * graph G7):
+  *
+  *  - [[run]]: one load of the bulk files into the doc and graph stores;
+  *  - [[amend]]: the incremental path, a `Trigger.AvailableNow` stream of
+  *    `indiv22` amendment files landing in a directory (the `fecpipe`
+  *    source, the same pipe-text parser as [[run]]), each micro-batch
+  *    upserted into the same stores. Streaming k landing files gives the
+  *    stores one [[run]] over their union gives (FecAmendEquivalenceSpec).
   */
 object FecPipeline {
 
@@ -37,6 +44,9 @@ object FecPipeline {
     FecSchemas.readBulkFile(spark, table, path)
   }
 
+  /** Load the bulk files in `bulkDir` into the doc and graph stores
+    * under `storeDir`. Per store, the write order is: candidates,
+    * committees, contributions, expenditures. */
   def run(spark: SparkSession, bulkDir: String, storeDir: String,
       runTs: Column): Summary = {
     val cn = bulk(spark, bulkDir, "cn22")
@@ -47,28 +57,21 @@ object FecPipeline {
     val oppexp = bulk(spark, bulkDir, "oppexp22")
     val indExp = bulk(spark, bulkDir, "independent_expenditure_2022")
 
-    // each master stage feeds several consumers (doc writes, graph
-    // loads, summary counts) — materialize once instead of re-running
-    // the bulk-read + join chain per consumer
-    val contributions = MasterTables.contributions(oth, indiv)
-      .localCheckpoint(true)
-    val expenditures = MasterTables.expenditures(oppexp, indExp, cm, cn)
-      .localCheckpoint(true)
-    val elastic = ContributionViews.elastic(contributions, cn, cm)
-      .localCheckpoint(true)
-
     val docs = new DocStore(spark, s"$storeDir/docs")
     docs.index("federal_fec_candidates", "doc_id",
       FecDocs.candidateDocs(cn, runTs))
     docs.index("federal_fec_committees", "doc_id",
       FecDocs.committeeDocs(cm, runTs))
-    docs.upsert("federal_fec_contributions", "doc_id",
-      FecDocs.contributionDocs(elastic, runTs))
-
     val graph = new GraphStore(spark, s"$storeDir/graph")
     FecGraph.loadCandidates(graph, cn)
     FecGraph.loadCommittees(graph, cm, ccl)
-    FecGraph.loadContributions(graph, elastic)
+
+    val (contributions, elastic) =
+      contribute(docs, graph, oth, indiv, cn, cm, runTs)
+    // the master feeds the graph load and the summary count:
+    // materialize once instead of re-running the bulk-read + join chain
+    val expenditures = MasterTables.expenditures(oppexp, indExp, cm, cn)
+      .localCheckpoint(true)
     FecGraph.loadExpenditures(graph, expenditures)
 
     val docIndexes = Seq("federal_fec_candidates", "federal_fec_committees",
@@ -88,5 +91,44 @@ object FecPipeline {
         graph.readVertices(l).map(df => l -> df.count())).toMap,
       graphEdges = eTypes.flatMap(t =>
         graph.readEdges(t).map(df => t -> df.count())).toMap)
+  }
+
+  /** Drain the `indiv22` amendment files that landed in `landingDir`
+    * since the last call into the stores under `storeDir`, one
+    * micro-batch at a time (`Trigger.AvailableNow`; `checkpointDir`
+    * records the files already consumed, so a restart reads only new
+    * ones). `cn22`/`cm22` in `bulkDir` enrich the batches. Lines are
+    * parsed permissively, as [[run]] parses them: a short line is
+    * null-padded, extra trailing fields are dropped. */
+  def amend(spark: SparkSession, bulkDir: String, landingDir: String,
+      storeDir: String, checkpointDir: String, runTs: Column): Unit = {
+    val cn = bulk(spark, bulkDir, "cn22").localCheckpoint(true)
+    val cm = bulk(spark, bulkDir, "cm22").localCheckpoint(true)
+    val noOth = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], FecSchemas.oth)
+    val docs = new DocStore(spark, s"$storeDir/docs")
+    val graph = new GraphStore(spark, s"$storeDir/graph")
+    IncrementalPipeline.drain(
+      spark.readStream.format("fecpipe").option("table", "indiv22")
+        .option("mode", "permissive"),
+      landingDir, checkpointDir, identity,
+      (indiv, _) => contribute(docs, graph, noOth, indiv, cn, cm, runTs),
+      maxFilesPerTrigger = None)
+  }
+
+  /** The contribution path of both entrypoints: master contributions →
+    * elastic view → doc upsert → graph G7. Returns the master and elastic
+    * rows, each materialized once for its several consumers. */
+  private def contribute(docs: DocStore, graph: GraphStore, oth: DataFrame,
+      indiv: DataFrame, cn: DataFrame, cm: DataFrame,
+      runTs: Column): (DataFrame, DataFrame) = {
+    val contributions = MasterTables.contributions(oth, indiv)
+      .localCheckpoint(true)
+    val elastic = ContributionViews.elastic(contributions, cn, cm)
+      .localCheckpoint(true)
+    docs.upsert("federal_fec_contributions", "doc_id",
+      FecDocs.contributionDocs(elastic, runTs))
+    FecGraph.loadContributions(graph, elastic)
+    (contributions, elastic)
   }
 }

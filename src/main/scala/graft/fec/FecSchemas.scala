@@ -1,6 +1,6 @@
 package graft.fec
 
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
 /** FEC bulk-table schema registry + readers (SURVEY §1.1, S3-S5).
@@ -160,81 +160,47 @@ object FecSchemas {
     "ElectioneeringComm_2022" -> electioneering,
     "CommunicationCosts_2022" -> communicationCosts)
 
-  /** S3: pipe-delimited unquoted text scan (no header). */
-  def readPipeText(spark: SparkSession, schema: StructType,
-      path: String): DataFrame =
-    pipeText(spark.read.schema(schema)).csv(path)
-
-  /** S4: quoted CSV with one header row. */
-  def readCsv(spark: SparkSession, schema: StructType,
-      path: String): DataFrame =
-    spark.read.schema(schema)
-      .option("header", "true")
-      .option("quote", "\"")
-      .csv(path)
-
   /** S5 dispatcher: route a bulk file to its schema+format by table
-    * name; `.txt` → pipe text, else headered CSV. */
+    * name; `.txt` → pipe text (S3), else quoted CSV with one header row
+    * (S4). */
   def readBulkFile(spark: SparkSession, table: String,
-      path: String): DataFrame =
-    if (path.endsWith(".txt")) readPipeText(spark, schemaOf(table), path)
-    else readCsv(spark, schemaOf(table), path)
+      path: String): DataFrame = {
+    val reader = spark.read.schema(schemaOf(table))
+    if (path.endsWith(".txt")) reader.options(pipeText).csv(path)
+    else reader.option("header", "true").option("quote", "\"").csv(path)
+  }
 
-  /** The quarantined pipe-text scan over an in-memory line Dataset —
-    * the same parser as [[readBulkFileQuarantined]]'s `.txt` branch
-    * applied to lines that arrive as a Dataset instead of files: the
-    * shape a streaming intake or a fixture synthesizer produces.
-    * Returns (clean rows, quarantined raw lines, the CACHED parse they
-    * both read) — the input is scanned once for both sides, and the
-    * caller unpersists the third element once its counts are
-    * materialized (a catalog row that re-runs per pass must not
-    * accumulate dead cached relations). */
+  /** The quarantined pipe-text scan over an in-memory line Dataset: a
+    * PERMISSIVE parse whose malformed raw lines land in a
+    * `_corrupt_record` column instead of failing the load (the
+    * reference's BQ load job fails the whole file on a bad row; at
+    * 100 TB a single bad row must not kill the batch). This is the
+    * shape a fixture synthesizer produces. Returns (clean rows,
+    * quarantined raw lines, the CACHED parse they both read): the input
+    * is scanned once for both sides, and the caller unpersists the
+    * third element once its counts are materialized (a catalog row that
+    * re-runs per pass must not accumulate dead cached relations). */
   def readPipeTextLinesQuarantined(spark: SparkSession, table: String,
       lines: org.apache.spark.sql.Dataset[String])
       : (DataFrame, DataFrame, DataFrame) = {
-    val cached = pipeText(quarantining(spark, table)).csv(lines).cache()
-    val (clean, bad) = splitQuarantine(cached)
-    (clean, bad, cached)
-  }
-
-  /** Lenient variant for dirty feeds at scale: malformed rows land in a
-    * `_corrupt_record` quarantine column instead of failing the load
-    * (the reference's BQ load job fails the whole file on a bad row —
-    * at 100 TB a single bad row must not kill the batch). Returns
-    * (clean rows, quarantined raw lines). */
-  def readBulkFileQuarantined(spark: SparkSession, table: String,
-      path: String): (DataFrame, DataFrame) = {
-    val reader = quarantining(spark, table)
-    val df =
-      if (path.endsWith(".txt")) pipeText(reader).csv(path)
-      else reader.option("header", "true").option("quote", "\"").csv(path)
-    splitQuarantine(df.cache())
+    val bad = org.apache.spark.sql.functions.col("_corrupt_record")
+    val cached = spark.read
+      .schema(StructType(schemaOf(table).fields :+
+        StructField("_corrupt_record", StringType, nullable = true)))
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", "_corrupt_record")
+      .options(pipeText).csv(lines).cache()
+    (cached.filter(bad.isNull).drop("_corrupt_record"),
+      cached.filter(bad.isNotNull).select(bad), cached)
   }
 
   private def schemaOf(table: String): StructType =
     registry.getOrElse(table,
       throw new IllegalArgumentException(s"unexpected file: $table"))
 
-  /** The one pipe-text parser setup: delimiter `|`, quoting off, no
-    * header (`main.py:27-30`). */
-  private def pipeText(reader: DataFrameReader): DataFrameReader =
-    reader.option("delimiter", "|").option("quote", "")
-      .option("header", "false")
-
-  /** A PERMISSIVE reader over `table`'s schema plus a `_corrupt_record`
-    * column that receives each malformed raw line. */
-  private def quarantining(spark: SparkSession,
-      table: String): DataFrameReader =
-    spark.read
-      .schema(StructType(schemaOf(table).fields :+
-        StructField("_corrupt_record", StringType, nullable = true)))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-
-  /** (clean rows, quarantined raw lines) of a quarantining parse. */
-  private def splitQuarantine(parsed: DataFrame): (DataFrame, DataFrame) = {
-    val bad = org.apache.spark.sql.functions.col("_corrupt_record")
-    (parsed.filter(bad.isNull).drop("_corrupt_record"),
-      parsed.filter(bad.isNotNull).select(bad))
-  }
+  /** The one pipe-text parser setup, shared by the batch readers and
+    * the `fecpipe` stream: delimiter `|`, quoting off, no header
+    * (`main.py:27-30`). */
+  private[graft] val pipeText: Map[String, String] =
+    Map("delimiter" -> "|", "quote" -> "", "header" -> "false")
 }

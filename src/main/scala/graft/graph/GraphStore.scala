@@ -23,9 +23,9 @@ import graft.io.BucketedParquet
   *
   * Scale: tables are hash-bucketed via [[BucketedParquet]] — a MERGE
   * or DETACH-DELETE batch rewrites only the buckets it touches; the
-  * other N−1 bucket files are left byte-identical on disk. A 1k-row
-  * amendment batch against a 100 TB Expenditure table therefore
-  * rewrites ~batch-sized buckets, not the store.
+  * untouched bucket files are left byte-identical on disk. A batch of
+  * b distinct keys touches about N(1−e^(−b/N)) of the N buckets, so a
+  * 1k-row amendment batch rewrites every bucket of a 16-bucket table.
   */
 final class GraphStore(spark: SparkSession, baseDir: String,
     numBuckets: Int = 16) {

@@ -14,8 +14,10 @@ import java.nio.file.{Files, Path, Paths}
   * collect — metadata, not data), reads ONLY those via partition
   * pruning, merges, and swaps ONLY those directories through a staging
   * dir; every other bucket's files stay byte-identical on disk. A
-  * 1k-row batch against a 100 TB table rewrites ~batch-sized buckets,
-  * not the store. Rows are repartitioned on the bucket id before the
+  * batch of b distinct keys hashes into about N(1−e^(−b/N)) of the N
+  * buckets, so once b ≥ N it rewrites nearly every bucket, whatever
+  * the store's size: the write cost is bounded by the table size, not
+  * by the batch. Rows are repartitioned on the bucket id before the
   * write so each bucket directory stays one file per write.
   *
   * This object is the ONLY owner of that protocol: the stores supply

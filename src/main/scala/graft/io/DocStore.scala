@@ -22,8 +22,9 @@ import org.apache.spark.sql.types.StructType
   * merge has no concurrent writers. Indices are hash-bucketed via
   * [[BucketedParquet]]: every write mode computes the buckets its
   * batch touches, reads and merges ONLY those, and swaps only those
-  * directories — a small upsert against a 100 TB index rewrites
-  * batch-sized buckets, not the index.
+  * directories; untouched buckets stay byte-identical. A batch of b
+  * distinct keys touches about N(1−e^(−b/N)) of the N buckets: every
+  * bucket once b ≥ N.
   */
 final class DocStore(spark: SparkSession, baseDir: String,
     numBuckets: Int = 16) {

@@ -70,33 +70,27 @@ object StreamOps {
     // micro-batches ran at the session's shuffle width, and EVERY state
     // partition pays a per-batch store open/commit — profiled 34 s of
     // state-store CPU behind ~1.2 s of wall for state that is one row
-    // per distinct fingerprint. The stream's width is scoped to this
-    // query (set/restored around the run; the checkpoint dir is
-    // per-invocation scratch, so the pinned width never fights a prior
-    // checkpoint). The ledger is width-independent — DedupState is
-    // keyed by fingerprint and commutative — and the two-wave replay
-    // order is unchanged. Parameterised for scale:
-    // spark.graft.stream.statePartitions (state scales with distinct
-    // fingerprints; size it to the corpus on a cluster).
-    val stateParts = s.conf
-      .getOption("spark.graft.stream.statePartitions").getOrElse("8")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
+    // per distinct fingerprint. The stream runs in its own session at
+    // 8 shuffle (= state) partitions, so the caller's session is never
+    // touched; the checkpoint dir is per-invocation scratch, so the
+    // pinned width never fights a prior checkpoint. The ledger is
+    // width-independent — DedupState is keyed by fingerprint and
+    // commutative — and the two-wave replay order is unchanged.
+    val streamSession = s.newSession()
+    streamSession.conf.set("spark.sql.shuffle.partitions", "8")
     try {
-      s.conf.set("spark.sql.shuffle.partitions", stateParts)
       for (w <- 0 to 1)
         all.filter(pmod(col("doc_id"), lit(2)) === w)
           .coalesce(1).write.mode("append").parquet(s"$tmp/src")
       val schema = s.read.parquet(s"$tmp/src").schema
       IncrementalPipeline.runAvailableNow(
-        s, s"$tmp/src", schema, s"$tmp/ckpt",
+        streamSession, s"$tmp/src", schema, s"$tmp/ckpt",
         df => FunnelIntake.intake(df).toDF(),
         (b, _) => b.collect().foreach { r =>
           sink(r.getString(0)) = (r.getLong(1), r.getLong(2))
         },
         maxFilesPerTrigger = Some(1))
     } finally {
-      try s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      catch { case _: Throwable => () }
       // the WHOLE sweep is swallow-guarded: a cleanup IOException in
       // a finally would otherwise mask the real streaming failure;
       // the walk stream closes so the directory handle never leaks

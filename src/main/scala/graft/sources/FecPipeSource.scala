@@ -1,550 +1,62 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader}
-import java.nio.charset.{CodingErrorAction, StandardCharsets}
-import java.nio.file.{Files, Paths, StandardOpenOption}
-import java.util.{Map => JMap}
+import org.apache.spark.sql.{SQLContext, classic}
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.execution.streaming.Source
+import org.apache.spark.sql.execution.streaming.runtime.FileStreamSource
+import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
+import org.apache.spark.sql.types.StructType
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual}
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
-
-/** DataSource V2 connector for the FEC bulk pipe-delimited text feeds
-  * (`indiv22.txt` and friends — reference: the `load_fec/main.py`
-  * bulk-file scans, the S3/S5 rows of SURVEY §2) — the full Spark
-  * connector contract rather than a `spark.read.csv` wrapper:
+/** `spark.readStream.format("fecpipe")`: the FEC bulk pipe-text feeds
+  * (`indiv22.txt` and friends) as a file stream. It is Spark's own
+  * [[FileStreamSource]] over the CSV format with the one pipe-text
+  * setup of [[graft.fec.FecSchemas]], so the stream and the batch run
+  * share one parser; Spark's CSV scan prunes columns and pushes filters.
   *
-  *  - **Schema dispatch**: `option("table", "cn22")` infers the schema
-  *    from [[graft.fec.FecSchemas.registry]] (the reference's
-  *    route-on-filename behavior, moved into `inferSchema`).
-  *  - **Column pruning** ([[SupportsPushDownRequiredColumns]]): the
-  *    reader converts ONLY the projected fields — on a 20 GB bulk file
-  *    a 2-column projection parses 2 fields per line, not 21. The
-  *    split itself is unavoidable for delimited text; conversion (and
-  *    boxing) is where line-format scan time goes.
-  *  - **Filter pushdown** ([[SupportsPushDownFilters]]): Equal/IsNot
-  *    Null/range filters evaluate inside the reader BEFORE the row
-  *    crosses the source boundary, so a selective filter never
-  *    materializes non-matching InternalRows. Pushed filters are
-  *    FULLY handled (not re-evaluated by Spark) — the spec proves
-  *    both behaviors.
-  *  - **Partition planning**: one [[InputPartition]] per file (pipe
-  *    text has no record-boundary sync marks, so files are the split
-  *    unit — the same per-file parallelism the driver's zip expansion
-  *    produces; at 100 TB the feed arrives as thousands of files, so
-  *    file granularity saturates any executor count).
-  *
-  * Registered as `spark.read.format("fecpipe")` via the
-  * DataSourceRegister service file.
-  *
-  * **Hostile-input contract** (round-6 hardening):
-  *  - Text decodes as **UTF-8 on both sides** (writer already wrote
-  *    UTF-8; the reader used to follow the JVM locale). Malformed
-  *    byte sequences decode to U+FFFD instead of killing the task —
-  *    the Spark CSV reader's behavior.
-  *  - **In-flight `.tmp` temps are never data**: batch and micro-
-  *    batch listings exclude them, so crash litter from an aborted
-  *    write (or an in-flight writer) is never scanned as data — any
-  *    other extension (pre-existing feed layouts) still reads.
-  *  - **Wrong field counts fail loudly by default**: a line whose
-  *    split width ≠ the schema width throws with file + line number
-  *    (`option("mode", "fail")`, the default). `mode=drop` skips and
-  *    COUNTS such lines (the `malformedLines` custom metric, visible
-  *    in the Spark UI), optionally quarantining the raw lines to
-  *    `option("quarantineDir", …)/<file>.bad` — the CSV path's
-  *    `_corrupt_record` policy at connector level. `mode=permissive`
-  *    restores the legacy null-pad/ignore-extras behavior.
-  *  - The **writer rejects field values containing `|`, `\n` or
-  *    `\r`** (they would silently corrupt the record on read-back). */
-class FecPipeSource extends TableProvider with DataSourceRegister {
+  *  - `option("table", "indiv22")` picks the schema from
+  *    [[graft.fec.FecSchemas.registry]]; a user schema overrides it.
+  *  - `option("mode", …)`: `fail` (default) fails the batch on a line
+  *    whose field count is not the schema width, even when the query
+  *    reads fewer columns; `permissive` null-pads short lines and drops
+  *    extra trailing fields. Any other value throws (Spark's CSV reader
+  *    would fall back to PERMISSIVE silently).
+  *  - Text decodes as UTF-8; malformed bytes become U+FFFD. */
+class FecPipeSource extends StreamSourceProvider with DataSourceRegister {
   override def shortName(): String = "fecpipe"
 
-  override def supportsExternalMetadata(): Boolean = true
+  override def sourceSchema(sqlContext: SQLContext,
+      schema: Option[StructType], providerName: String,
+      parameters: Map[String, String]): (String, StructType) = {
+    csvOptions(parameters) // an unknown mode fails at load(), not at start()
+    (shortName(), schema.getOrElse(registrySchema(parameters)))
+  }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val table = options.get("table")
-    require(table != null,
-      "fecpipe: pass option(\"table\", <registry name>) or an explicit schema")
+  override def createSource(sqlContext: SQLContext, metadataPath: String,
+      schema: Option[StructType], providerName: String,
+      parameters: Map[String, String]): Source =
+    new FileStreamSource(
+      sqlContext.sparkSession.asInstanceOf[classic.SparkSession],
+      parameters.getOrElse("path",
+        throw new IllegalArgumentException("fecpipe: no path")),
+      classOf[CSVFileFormat].getCanonicalName,
+      schema.getOrElse(registrySchema(parameters)), Nil, metadataPath,
+      csvOptions(parameters))
+
+  private def registrySchema(parameters: Map[String, String]): StructType = {
+    val table = parameters.getOrElse("table", throw new IllegalArgumentException(
+      "fecpipe: pass option(\"table\", <registry name>) or an explicit schema"))
     graft.fec.FecSchemas.registry.getOrElse(table,
       throw new IllegalArgumentException(s"fecpipe: unknown table $table"))
   }
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new FecPipeTable(schema, properties.asScala.toMap)
-}
-
-final class FecPipeTable(schema: StructType, props: Map[String, String])
-    extends Table with SupportsRead with SupportsWrite {
-  override def name(): String =
-    s"fecpipe(${props.getOrElse("path", "?")})"
-  override def schema(): StructType = schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = {
-    def opt(k: String) = Option(options.get(k)).orElse(props.get(k))
-    val path = opt("path")
-      .getOrElse(throw new IllegalArgumentException("fecpipe: no path"))
-    val mode = opt("mode").getOrElse("fail").toLowerCase match {
-      case m @ ("fail" | "drop" | "permissive") => m
-      case other => throw new IllegalArgumentException(
-        s"fecpipe: mode must be fail|drop|permissive, got $other")
-    }
-    new FecPipeScanBuilder(schema, path, mode, opt("quarantinedir"))
-  }
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    val path = Option(info.options.get("path"))
-      .orElse(props.get("path"))
-      .getOrElse(throw new IllegalArgumentException("fecpipe: no path"))
-    new FecPipeWriteBuilder(info.schema(), path)
-  }
-}
-
-/** Shared directory listing: data files only — every regular file
-  * EXCEPT in-flight/crash-litter `*.tmp` temps (pre-existing feed
-  * layouts may use any extension, so the filter excludes temps
-  * rather than requiring `.txt`), name-sorted, and the `Files.list`
-  * stream is closed (it holds a directory fd; streaming re-lists
-  * every trigger). A non-directory path is taken verbatim — the
-  * caller explicitly named that file. */
-private[sources] object FecPipeFiles {
-  def dataFiles(path: String): Seq[String] = {
-    val p = Paths.get(path)
-    if (Files.isDirectory(p)) {
-      val st = Files.list(p)
-      try st.iterator().asScala
-        .filter { f =>
-          val n = f.getFileName.toString
-          Files.isRegularFile(f) && !n.endsWith(".tmp") &&
-            !n.endsWith(".bad") // quarantine output is never data
-        }
-        .map(_.toString).toSeq.sorted
-      finally st.close()
-    } else Seq(p.toString)
-  }
-}
-
-/** The `malformedLines` metric pair: wrong-field-count lines skipped
-  * under `mode=drop`, summed across reader tasks. */
-final class MalformedLinesMetric extends CustomSumMetric {
-  override def name(): String = "malformedLines"
-  override def description(): String =
-    "lines dropped for wrong field count"
-}
-final case class MalformedLinesTaskMetric(value: Long)
-    extends CustomTaskMetric {
-  override def name(): String = "malformedLines"
-}
-
-/** Write side of the connector — the two-phase commit the
-  * StagedSwapWriter sink family uses, expressed through the V2
-  * contract: each task writes `part-*.txt.tmp` and reports it in its
-  * commit message; the DRIVER's commit renames every temp in one pass
-  * (and under `truncate` first deletes the previous generation), so a
-  * failed job leaves only `.tmp` litter, never a half-visible dataset.
-  * Fields render pipe-joined in schema order, NULL → empty (the bulk
-  * feeds' convention the reader inverts). */
-final class FecPipeWriteBuilder(schema: StructType, path: String)
-    extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite =
-      new FecPipeBatchWrite(schema, path, doTruncate)
-  }
-}
-
-final case class FecPipeCommit(tmp: String) extends WriterCommitMessage
-
-final class FecPipeBatchWrite(schema: StructType, path: String,
-    truncate: Boolean) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory = new FecPipeWriterFactory(schema, path)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = Paths.get(path)
-    Files.createDirectories(dir)
-    if (truncate)
-      // delete exactly the previous generation this writer produced
-      // (.txt renames) — never unrelated files sharing the directory
-      FecPipeFiles.dataFiles(path)
-        .filter(_.endsWith(".txt"))
-        .foreach(f => Files.delete(Paths.get(f)))
-    messages.foreach { case FecPipeCommit(tmp) =>
-      val t = Paths.get(tmp)
-      Files.move(t, t.resolveSibling(
-        t.getFileName.toString.stripSuffix(".tmp")))
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case FecPipeCommit(tmp) => Files.deleteIfExists(Paths.get(tmp))
-      case _ => ()
-    }
-}
-
-final class FecPipeWriterFactory(schema: StructType, path: String)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : DataWriter[InternalRow] =
-    new FecPipeDataWriter(schema, path, partitionId, taskId)
-}
-
-final class FecPipeDataWriter(schema: StructType, path: String,
-    partitionId: Int, taskId: Long) extends DataWriter[InternalRow] {
-  private val tmp = {
-    Files.createDirectories(Paths.get(path))
-    Paths.get(path, f"part-$partitionId%05d-$taskId.txt.tmp")
-  }
-  private val out = Files.newBufferedWriter(tmp)
-
-  override def write(row: InternalRow): Unit = {
-    val line = schema.fields.indices.map { i =>
-      if (row.isNullAt(i)) ""
-      else schema.fields(i).dataType match {
-        case StringType =>
-          val v = row.getUTF8String(i).toString
-          // a delimiter or line break inside a field would silently
-          // corrupt the record on read-back (extra fields / split
-          // rows) — fail the write loudly instead
-          if (v.indexOf('|') >= 0 || v.indexOf('\n') >= 0
-              || v.indexOf('\r') >= 0)
-            throw new IllegalArgumentException(
-              s"fecpipe: field ${schema.fields(i).name} contains the " +
-                "pipe delimiter or a line break; the format cannot " +
-                s"represent it: ${v.take(80)}")
-          v
-        case IntegerType => row.getInt(i).toString
-        case LongType    => row.getLong(i).toString
-        case FloatType   => row.getFloat(i).toString
-        case DoubleType  => row.getDouble(i).toString
+  // without column pruning the CSV parser splits every field, so the
+  // width check of FAILFAST sees the whole line under any projection
+  private def csvOptions(parameters: Map[String, String]): Map[String, String] =
+    parameters ++ graft.fec.FecSchemas.pipeText ++ (
+      parameters.getOrElse("mode", "fail").toLowerCase match {
+        case "fail" => Map("mode" -> "FAILFAST", "columnPruning" -> "false")
+        case "permissive" => Map("mode" -> "PERMISSIVE")
         case other => throw new IllegalArgumentException(
-          s"fecpipe: unsupported type $other")
-      }
-    }.mkString("|")
-    out.write(line)
-    out.write("\n")
-  }
-
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    FecPipeCommit(tmp.toString)
-  }
-
-  override def abort(): Unit = {
-    out.close()
-    Files.deleteIfExists(tmp)
-  }
-
-  override def close(): Unit = ()
-}
-
-final class FecPipeScanBuilder(fullSchema: StructType, path: String,
-    mode: String, quarantineDir: Option[String])
-    extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
-
-  private var required: StructType = fullSchema
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    // preserve the source field order; Spark may request any order
-    required = StructType(fullSchema.fields
-      .filter(f => requiredSchema.fieldNames.contains(f.name)))
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (supported, rest) = filters.partition(FecPipeScan.evaluable)
-    pushed = supported
-    rest // Spark keeps evaluating only these
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def build(): Scan = new FecPipeScan(fullSchema, required,
-    pushed, path, mode, quarantineDir)
-}
-
-final class FecPipeScan(fullSchema: StructType, required: StructType,
-    filters: Array[Filter], path: String, mode: String,
-    quarantineDir: Option[String]) extends Scan with Batch {
-
-  override def readSchema(): StructType = required
-
-  override def description(): String =
-    s"FecPipeScan path=$path ReadSchema=${required.fieldNames.mkString(",")}" +
-      s" PushedFilters=[${filters.mkString(", ")}] mode=$mode"
-
-  override def toBatch: Batch = this
-
-  override def supportedCustomMetrics(): Array[CustomMetric] =
-    Array(new MalformedLinesMetric)
-
-  override def planInputPartitions(): Array[InputPartition] =
-    FecPipeFiles.dataFiles(path)
-      .map(f => FecPipePartition(f): InputPartition).toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new FecPipeReaderFactory(fullSchema, required, filters, mode,
-      quarantineDir)
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : streaming.MicroBatchStream =
-    new FecPipeMicroBatchStream(fullSchema, required, filters, path,
-      mode, quarantineDir)
-}
-
-/** Micro-batch streaming over the same feed directory: each batch is a
-  * RANGE OF FILES in sorted-name order (the bulk feeds' arrival
-  * convention — dated filenames, so new drops sort after consumed
-  * ones). The offset is simply "how many files have been consumed" —
-  * restart from a checkpoint skips exactly the files earlier batches
-  * committed, giving exactly-once file-grain replay with zero
-  * source-side state. Column pruning and filter pushdown flow through
-  * unchanged (the stream shares the batch ScanBuilder).
-  *
-  * The listing is captured ONCE per batch: `latestOffset` snapshots
-  * the sorted file list and `planInputPartitions` slices THAT
-  * snapshot — a file landing (or a `.tmp`→`.txt` rename reordering
-  * names) between the two calls can no longer shift the slice and
-  * skip or double-read a file. On restart (no snapshot yet, or a
-  * snapshot shorter than the checkpointed end) it re-lists once. */
-final class FecPipeMicroBatchStream(fullSchema: StructType,
-    required: StructType, filters: Array[Filter], path: String,
-    mode: String, quarantineDir: Option[String])
-    extends streaming.MicroBatchStream {
-
-  @volatile private var snapshot: Seq[String] = Nil
-
-  override def initialOffset(): streaming.Offset = FecPipeOffset(0)
-
-  override def latestOffset(): streaming.Offset = {
-    snapshot = FecPipeFiles.dataFiles(path)
-    FecPipeOffset(snapshot.size)
-  }
-
-  override def deserializeOffset(json: String): streaming.Offset =
-    FecPipeOffset(json.trim.toInt)
-
-  override def planInputPartitions(start: streaming.Offset,
-      end: streaming.Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[FecPipeOffset].n
-    val e = end.asInstanceOf[FecPipeOffset].n
-    val files =
-      if (snapshot.size >= e) snapshot else FecPipeFiles.dataFiles(path)
-    files.slice(s, e)
-      .map(f => FecPipePartition(f): InputPartition).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new FecPipeReaderFactory(fullSchema, required, filters, mode,
-      quarantineDir)
-
-  override def commit(end: streaming.Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-final case class FecPipeOffset(n: Int) extends streaming.Offset {
-  override def json(): String = n.toString
-}
-
-final case class FecPipePartition(file: String) extends InputPartition
-
-object FecPipeScan {
-  /** Filters the reader can fully evaluate post-parse. */
-  def evaluable(f: Filter): Boolean = f match {
-    case _: EqualTo | _: IsNotNull | _: GreaterThan |
-         _: GreaterThanOrEqual | _: LessThan | _: LessThanOrEqual => true
-    case _ => false
-  }
-}
-
-final class FecPipeReaderFactory(fullSchema: StructType,
-    required: StructType, filters: Array[Filter], mode: String,
-    quarantineDir: Option[String])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    new FecPipeReader(partition.asInstanceOf[FecPipePartition].file,
-      fullSchema, required, filters, mode, quarantineDir)
-}
-
-/** Line reader: split on '|' (trailing empties KEPT, so the field
-  * count is meaningful), convert ONLY the projected fields, evaluate
-  * pushed filters before emitting. Empty fields are NULL (the bulk
-  * feeds' convention). Decodes as UTF-8 with U+FFFD replacement for
-  * malformed bytes (the writer side is UTF-8; the old FileReader
-  * followed the JVM locale). Lines whose field count ≠ the schema
-  * width follow `mode`: fail (throw with file+line), drop (skip,
-  * count in the `malformedLines` metric, optionally append the raw
-  * line to `<quarantineDir>/<file>.bad` — written via an
-  * attempt-unique temp file + atomic rename, so concurrent readers
-  * from speculation/retries can't clobber each other), permissive
-  * (legacy null-pad / ignore-extras). */
-final class FecPipeReader(file: String, fullSchema: StructType,
-    required: StructType, filters: Array[Filter], mode: String,
-    quarantineDir: Option[String])
-    extends PartitionReader[InternalRow] {
-
-  private val in = {
-    val dec = StandardCharsets.UTF_8.newDecoder()
-      .onMalformedInput(CodingErrorAction.REPLACE)
-      .onUnmappableCharacter(CodingErrorAction.REPLACE)
-    new BufferedReader(new InputStreamReader(
-      Files.newInputStream(Paths.get(file)), dec))
-  }
-  private var lineNo = 0L
-  private var malformed = 0L
-  // opened on FIRST malformed line only — a clean file must not leave
-  // an empty .bad marker behind. Written to an attempt-unique temp
-  // name and renamed on close: speculative execution / task retries
-  // run CONCURRENT readers over the same file, and two writers on the
-  // literal .bad path would interleave or clobber each other; the
-  // atomic last-rename-wins move means the surviving .bad is always
-  // one complete attempt's output.
-  private var quarantineOpened = false
-  private var quarantineTmp: Option[java.nio.file.Path] = None
-  private var quarantineDst: Option[java.nio.file.Path] = None
-  private lazy val quarantine = quarantineDir.map { dir =>
-    val d = Paths.get(dir)
-    Files.createDirectories(d)
-    quarantineOpened = true
-    val attempt = Option(org.apache.spark.TaskContext.get())
-      .map(_.taskAttemptId.toString)
-      .getOrElse(java.util.UUID.randomUUID().toString)
-    val base = Paths.get(file).getFileName.toString + ".bad"
-    val tmp = d.resolve(base + "." + attempt + ".tmp")
-    quarantineTmp = Some(tmp)
-    quarantineDst = Some(d.resolve(base))
-    Files.newBufferedWriter(tmp, StandardCharsets.UTF_8,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-  }
-  // projected field -> (source column position, type)
-  private val slots: Array[(Int, DataType)] =
-    required.fields.map(f => (fullSchema.fieldIndex(f.name), f.dataType))
-  private val filterSlots: Array[(Filter, Int, DataType)] =
-    filters.map { f =>
-      val name = f.references.head
-      val i = fullSchema.fieldIndex(name)
-      (f, i, fullSchema.fields(i).dataType)
-    }
-  private var row: InternalRow = _
-
-  private def convert(raw: String, dt: DataType): Any =
-    if (raw == null || raw.isEmpty) null
-    else dt match {
-      case StringType  => UTF8String.fromString(raw)
-      case IntegerType => raw.trim.toInt
-      case LongType    => raw.trim.toLong
-      case FloatType   => raw.trim.toFloat
-      case DoubleType  => raw.trim.toDouble
-      case other => throw new IllegalArgumentException(
-        s"fecpipe: unsupported type $other")
-    }
-
-  private def cmp(raw: String, dt: DataType, v: Any): Option[Int] =
-    if (raw == null || raw.isEmpty) None
-    else Some(dt match {
-      case StringType => raw.compareTo(v.toString)
-      case IntegerType => java.lang.Integer.compare(raw.trim.toInt,
-        v.asInstanceOf[Number].intValue)
-      case LongType => java.lang.Long.compare(raw.trim.toLong,
-        v.asInstanceOf[Number].longValue)
-      case FloatType => java.lang.Float.compare(raw.trim.toFloat,
-        v.asInstanceOf[Number].floatValue)
-      case DoubleType => java.lang.Double.compare(raw.trim.toDouble,
-        v.asInstanceOf[Number].doubleValue)
-      case other => throw new IllegalArgumentException(
-        s"fecpipe: unsupported type $other")
-    })
-
-  private def keep(parts: Array[String]): Boolean =
-    filterSlots.forall { case (f, i, dt) =>
-      val raw = if (i < parts.length) parts(i) else null
-      f match {
-        case _: IsNotNull            => raw != null && raw.nonEmpty
-        case EqualTo(_, v)           => cmp(raw, dt, v).contains(0)
-        case GreaterThan(_, v)       => cmp(raw, dt, v).exists(_ > 0)
-        case GreaterThanOrEqual(_, v) => cmp(raw, dt, v).exists(_ >= 0)
-        case LessThan(_, v)          => cmp(raw, dt, v).exists(_ < 0)
-        case LessThanOrEqual(_, v)   => cmp(raw, dt, v).exists(_ <= 0)
-        case _                       => true
-      }
-    }
-
-  /** Split keeping trailing empty fields (String.split('|') drops
-    * them, which would make legitimate trailing-NULL rows look
-    * short). */
-  private def splitLine(line: String): Array[String] = {
-    val out = Array.newBuilder[String]
-    out.sizeHint(fullSchema.length)
-    var start = 0
-    var i = line.indexOf('|')
-    while (i >= 0) {
-      out += line.substring(start, i)
-      start = i + 1
-      i = line.indexOf('|', start)
-    }
-    out += line.substring(start)
-    out.result()
-  }
-
-  override def next(): Boolean = {
-    var line = in.readLine()
-    while (line != null) {
-      lineNo += 1
-      val parts = splitLine(line)
-      val ok = parts.length == fullSchema.length
-      if (!ok && mode == "fail")
-        throw new IllegalStateException(
-          s"fecpipe: $file line $lineNo has ${parts.length} fields, " +
-            s"schema has ${fullSchema.length} " +
-            "(option(\"mode\", \"drop\"|\"permissive\") to tolerate)")
-      if (!ok && mode == "drop") {
-        malformed += 1
-        quarantine.foreach { w => w.write(line); w.write("\n") }
-      } else if (keep(parts)) {
-        val values = new Array[Any](slots.length)
-        var k = 0
-        while (k < slots.length) {
-          val (i, dt) = slots(k)
-          values(k) = convert(if (i < parts.length) parts(i) else null, dt)
-          k += 1
-        }
-        row = new GenericInternalRow(values)
-        return true
-      }
-      line = in.readLine()
-    }
-    false
-  }
-
-  override def get(): InternalRow = row
-
-  override def currentMetricsValues(): Array[CustomTaskMetric] =
-    Array(MalformedLinesTaskMetric(malformed))
-
-  override def close(): Unit = {
-    in.close()
-    if (quarantineOpened) {
-      quarantine.foreach(_.close())
-      for (tmp <- quarantineTmp; dst <- quarantineDst)
-        Files.move(tmp, dst,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-  }
+          s"fecpipe: mode must be fail|permissive, got $other")
+      })
 }

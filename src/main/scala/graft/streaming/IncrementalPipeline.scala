@@ -56,9 +56,10 @@ object IncrementalPipeline {
       checkpointDir, transform, sink, maxFilesPerTrigger)
   }
 
-  /** The AvailableNow loop behind both sources: `reader` fixes the
-    * format and schema, the rest is shared. */
-  private def drain(
+  /** The AvailableNow loop behind every file stream (these two and
+    * [[graft.fec.FecPipeline.amend]]): `reader` fixes the format and
+    * schema, the rest is shared. */
+  private[graft] def drain(
       reader: DataStreamReader,
       srcDir: String,
       checkpointDir: String,

@@ -75,13 +75,15 @@ class GraftApiSpec extends SparkFunSuite {
   }
 
   test("quarantined bulk read splits malformed rows instead of failing") {
+    import spark.implicits._
     val d = Files.createTempDirectory("quar").toString
-    Files.writeString(Paths.get(s"$d/ccl22.txt"), Seq(
+    val lines = Seq(
       "H001|2022|2022|C001|H|A|1001",
       "H002|NOT_A_YEAR|2022|C002|S|B|1002", // bad INT field
-      "H003|2022|2022|C003|Q|U|1003").mkString("\n"))
-    val (clean, quarantined) =
-      fec.FecSchemas.readBulkFileQuarantined(spark, "ccl22", s"$d/ccl22.txt")
+      "H003|2022|2022|C003|Q|U|1003")
+    Files.writeString(Paths.get(s"$d/ccl22.txt"), lines.mkString("\n"))
+    val (clean, quarantined, _) = fec.FecSchemas
+      .readPipeTextLinesQuarantined(spark, "ccl22", lines.toDS())
     assert(clean.count() == 2)
     assert(quarantined.count() == 1)
     assert(quarantined.head().getString(0).contains("NOT_A_YEAR"))

@@ -1,14 +1,14 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import graft.SparkFunSuite
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
-/** The DataSource V2 connector contract, proven end to end: schema
-  * dispatch, per-file partition planning, column pruning reaching the
-  * reader, and filter pushdown that Spark does NOT re-evaluate. */
+/** The `fecpipe` stream source: registry schema dispatch, checkpointed
+  * file replay, and the malformed-line contract of its two modes. */
 class FecPipeSourceSpec extends SparkFunSuite {
 
   // three cn22-shaped candidates; BBB has an empty election year
@@ -22,60 +22,51 @@ class FecPipeSourceSpec extends SparkFunSuite {
     d.toString
   }
 
-  private def read() = spark.read.format("fecpipe")
-    .option("table", "cn22").load(dir)
+  // one fixture indiv22 line: 21 fields, sub_id last
+  private val indivLine =
+    "C001|N|Q1|P|IMG1|15|IND|BROWN, ALICE|SF|CA|941101234|ACME|ENGINEER|" +
+      "01152022|500.0||T1|101||_|9001"
 
-  private def scanOf(df: org.apache.spark.sql.DataFrame): FecPipeScan = {
-    df.collect() // force planning
-    df.queryExecution.executedPlan
-      .collectFirst { case b: BatchScanExec => b }.get
-      .scan.asInstanceOf[FecPipeScan]
+  private def landed(lines: String*): String = {
+    val d = Files.createTempDirectory("fecpipe_landed")
+    Files.writeString(d.resolve("f001.txt"), lines.mkString("", "\n", "\n"))
+    d.toString
   }
 
-  test("schema dispatch + empty-field nulls + per-file partitions") {
-    val df = read()
-    assert(df.schema.fieldNames.take(3).toSeq ==
+  /** Every row one AvailableNow drain of `path` emits, projected on
+    * `cols` (all columns when empty). */
+  private def drain(path: String, table: String, mode: Option[String] = None,
+      cols: Seq[String] = Nil): Seq[Row] = {
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val reader = spark.readStream.format("fecpipe").option("table", table)
+    val df = mode.fold(reader)(reader.option("mode", _)).load(path)
+    val q = (if (cols.isEmpty) df else df.select(cols.map(col): _*))
+      .writeStream
+      .option("checkpointLocation",
+        Files.createTempDirectory("fecpipe_ckpt").toString)
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        val got = b.collect()
+        rows.synchronized { rows ++= got; () }
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    rows.synchronized(rows.toSeq)
+  }
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil
+    else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  test("schema dispatch + empty-field nulls on the stream") {
+    val schema = spark.readStream.format("fecpipe").option("table", "cn22")
+      .load(dir).schema
+    assert(schema.fieldNames.take(3).toSeq ==
       Seq("cand_id", "cand_name", "cand_pty_affiliation"))
-    val rows = df.orderBy("cand_id").collect()
-    assert(rows.length == 3)
-    assert(rows.map(_.getString(0)).toSeq == Seq("C001", "C002", "C003"))
+    val rows = drain(dir, "cn22").sortBy(_.getString(0))
+    assert(rows.map(_.getString(0)) == Seq("C001", "C002", "C003"))
     // empty pipe field -> NULL, typed column -> long
     assert(rows(1).isNullAt(3) && rows(0).getLong(3) == 2022L)
-    // one input partition per file
-    val scan = scanOf(df)
-    assert(scan.toBatch.planInputPartitions().length == 2)
-  }
-
-  test("column pruning reaches the reader's schema") {
-    val df = read().select("cand_name", "cand_st")
-    val scan = scanOf(df)
-    assert(scan.readSchema().fieldNames.toSeq ==
-      Seq("cand_name", "cand_st"))
-    assert(df.collect().map(_.getString(1)).sorted.toSeq ==
-      Seq("CA", "NY", "TX"))
-  }
-
-  test("supported filters push into the reader; Spark drops its copy") {
-    val df = read().filter(col("cand_pty_affiliation") === "DEM")
-      .select("cand_id")
-    val scan = scanOf(df)
-    assert(scan.description().contains("EqualTo(cand_pty_affiliation,DEM)"))
-    // fully handled: no FilterExec remains above the scan
-    assert(!df.queryExecution.executedPlan.toString.contains("Filter ("))
-    assert(df.collect().map(_.getString(0)).sorted.toSeq ==
-      Seq("C001", "C003"))
-    // range pushdown on a numeric column skips the null year
-    val r = read().filter(col("cand_election_yr") >= 2023).select("cand_id")
-    assert(scanOf(r).description().contains("GreaterThanOrEqual"))
-    assert(r.collect().map(_.getString(0)).toSeq == Seq("C003"))
-  }
-
-  test("unsupported filters stay on Spark's side and still apply") {
-    val df = read().filter(col("cand_name").contains("ALPHA"))
-      .select("cand_id")
-    val scan = scanOf(df)
-    assert(!scan.description().contains("StringContains"))
-    assert(df.collect().map(_.getString(0)).toSeq == Seq("C001"))
   }
 
   test("micro-batch streaming: file-offset checkpoint replays only new files") {
@@ -93,15 +84,15 @@ class FecPipeSourceSpec extends SparkFunSuite {
         .select("cand_id", "cand_pty_affiliation")
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination(60000)
     }
     runBatch()
     assert(spark.read.parquet(out).collect().map(_.getString(0)).sorted
       .toSeq == Seq("C001", "C002", "C003"))
-    // a third file lands; the checkpointed offset (2 files) skips the
-    // consumed ones — the restarted stream appends ONLY the new file
+    // a third file lands; the checkpoint skips the consumed files — the
+    // restarted stream appends ONLY the new file
     Files.writeString(sd.resolve("f003.txt"),
       "C004|DELTA, D|REP|2024|FL|H|09|I|C|P|4 D||MI|FL|33101\n")
     runBatch()
@@ -109,122 +100,67 @@ class FecPipeSourceSpec extends SparkFunSuite {
       .toSeq == Seq("C001", "C002", "C003", "C004"))
   }
 
-  test("write path: two-phase commit round-trips; overwrite truncates") {
-    val outDir = Files.createTempDirectory("fecwrite").toString
-    val src = read().filter(col("cand_pty_affiliation") === "DEM")
-    src.write.format("fecpipe").option("table", "cn22")
-      .mode("append").save(outDir)
-    // no .tmp litter after commit; data files are final .txt
-    val names = Files.list(Paths.get(outDir)).iterator()
-    val files = Iterator.continually(names)
-      .takeWhile(_.hasNext).map(_.next().getFileName.toString).toList
-    assert(files.nonEmpty && files.forall(_.endsWith(".txt")))
-    // round-trip through the reader: same rows, nulls preserved
-    val back = spark.read.format("fecpipe").option("table", "cn22")
-      .load(outDir)
-    assert(back.orderBy("cand_id").collect().map(_.getString(0)).toSeq ==
-      Seq("C001", "C003"))
-    // append adds, overwrite truncates the previous generation
-    src.write.format("fecpipe").option("table", "cn22")
-      .mode("append").save(outDir)
-    assert(spark.read.format("fecpipe").option("table", "cn22")
-      .load(outDir).count() == 4)
-    read().limit(1).write.format("fecpipe").option("table", "cn22")
-      .mode("overwrite").save(outDir)
-    assert(spark.read.format("fecpipe").option("table", "cn22")
-      .load(outDir).count() == 1)
-  }
-
-  test("single-file path load and unknown table rejection") {
-    val one = spark.read.format("fecpipe").option("table", "cn22")
-      .load(Paths.get(dir, "cn_b.txt").toString)
-    assert(one.count() == 1)
+  test("unknown table and unknown mode rejection") {
     intercept[IllegalArgumentException] {
-      spark.read.format("fecpipe").option("table", "nope").load(dir)
+      spark.readStream.format("fecpipe").option("table", "nope").load(dir)
     }
+    // Spark's CSV reader would silently read an unknown mode as PERMISSIVE
+    val e = intercept[IllegalArgumentException] {
+      spark.readStream.format("fecpipe").option("table", "cn22")
+        .option("mode", "drop").load(dir)
+    }
+    assert(e.getMessage.contains("fail|permissive"))
   }
 
-  // a directory with one clean file, one hostile file (short line,
-  // overlong line, invalid UTF-8 byte, trailing-empty line) and one
-  // in-flight .tmp temp
-  private lazy val hostileDir: String = {
+  test("invalid UTF-8 replaces, trailing-empty fields still count") {
     val d = Files.createTempDirectory("fecpipe_hostile")
     Files.writeString(d.resolve("cn_clean.txt"),
-      "C001|ALPHA, A|DEM|2022|CA|H|12|I|C|PCC1|1 MAIN||LA|CA|90001\n")
-    val good15 = "C003|GOOD, G|REP|2024|TX|S|00|C|C|PCC3|3 OAK||AUS|TX"
-    Files.write(d.resolve("cn_dirty.txt"),
-      ("C009|SHORT\n" +                       // 2 fields
-        good15 + "|90002|EXTRA\n" +           // 16 fields
-        good15 + "|90002\n" +                 // clean 15-field row
+      "C001|ALPHA, A|DEM|2022|CA|H|12|I|C|PCC1|1 MAIN||LA|CA|90001\n" +
         // trailing empty zip: still EXACTLY 15 fields, NOT malformed
         "C004|TRAIL, T|DEM|2022|WA|H|01|I|C|PCC4|4 FIR||SEA|WA|\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // invalid UTF-8 byte (0xFF) inside a 15-field line
     val pre = "C005|BAD".getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val post = "NAME|DEM|2022|OR|H|02|I|C|PCC5|5 ASH||PDX|OR|97201\n"
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val bad = pre ++ Array(0xFF.toByte) ++ post
-    Files.write(d.resolve("cn_utf8.txt"), bad)
-    Files.writeString(d.resolve("part-00000-9.txt.tmp"),
-      "C999|LITTER, L|DEM|2022|CA|H|12|I|C|PCC9|9 TMP||LA|CA|90009\n")
-    d.toString
-  }
-
-  test("hostile input: .tmp litter is never data; invalid UTF-8 " +
-      "replaces, trailing empties keep their field count") {
-    val df = spark.read.format("fecpipe").option("table", "cn22")
-      .option("mode", "drop").load(hostileDir)
-    val ids = df.select("cand_id").collect().map(_.getString(0)).sorted
-    // C999 (tmp litter) absent; C009/EXTRA rows dropped; the rest read
-    assert(ids.toSeq == Seq("C001", "C003", "C004", "C005"))
+    Files.write(d.resolve("cn_utf8.txt"), pre ++ Array(0xFF.toByte) ++ post)
+    // the default mode fails on a wrong width, so every line read here
+    // has exactly the schema's field count
+    val rows = drain(d.toString, "cn22")
+      .map(r => r.getString(0) -> r).toMap
+    assert(rows.keySet == Set("C001", "C004", "C005"))
     // the 0xFF byte decoded to U+FFFD instead of killing the task
-    val name5 = df.filter(col("cand_id") === "C005")
-      .select("cand_name").head().getString(0)
-    assert(name5 == "BAD�NAME")
+    assert(rows("C005").getString(1) == "BAD�NAME")
     // trailing-empty zip row kept, zip NULL
-    assert(df.filter(col("cand_id") === "C004")
-      .select("cand_zip").head().isNullAt(0))
+    assert(rows("C004").isNullAt(14))
   }
 
-  test("hostile input: wrong field counts fail loudly by default, " +
-      "mode=drop quarantines the raw lines") {
-    val e = intercept[Exception] {
-      spark.read.format("fecpipe").option("table", "cn22")
-        .load(hostileDir).collect()
-    }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil
-      else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(e).exists(_.contains("fields")))
-
-    val q = Files.createTempDirectory("fecpipe_quar").toString
-    val n = spark.read.format("fecpipe").option("table", "cn22")
-      .option("mode", "drop").option("quarantineDir", q)
-      .load(hostileDir).count()
-    assert(n == 4)
-    val bad = Files.readString(Paths.get(q, "cn_dirty.txt.bad"))
-    assert(bad.linesIterator.size == 2) // the 2- and 16-field lines
-    assert(bad.startsWith("C009|SHORT"))
-    // clean files leave no empty .bad markers behind
-    assert(!Files.exists(Paths.get(q, "cn_clean.txt.bad")))
+  test("permissive: two stray trailing fields load like the clean line") {
+    val clean = drain(landed(indivLine), "indiv22", Some("permissive"))
+    val dirty = drain(landed(indivLine + "|XTRA|XTRA"), "indiv22",
+      Some("permissive"))
+    assert(clean.size == 1 && clean.head.getLong(20) == 9001L)
+    assert(dirty == clean)
   }
 
-  test("writer rejects field values the format cannot represent") {
-    import spark.implicits._
-    val outDir = Files.createTempDirectory("fecpipe_wbad").toString
-    val df = Seq(("C001", "PIPE|IN NAME")).toDF("cand_id", "cand_name")
-    val e = intercept[Exception] {
-      df.write.format("fecpipe").option("table", "cn22")
-        .mode("append").save(outDir)
+  test("permissive: a short line is null-padded") {
+    val rows = drain(landed("C001|N|Q1|P|IMG1"), "indiv22", Some("permissive"))
+    assert(rows.size == 1)
+    assert(rows.head.toSeq.take(5) == Seq("C001", "N", "Q1", "P", "IMG1"))
+    assert((5 until 21).forall(rows.head.isNullAt))
+  }
+
+  test("default mode fails on a wrong-width line, even under a projection") {
+    // sanity: the clean line passes the default mode under the projection
+    assert(drain(landed(indivLine), "indiv22", cols = Seq("cmte_id")) ==
+      Seq(Row("C001")))
+    for (bad <- Seq(indivLine + "|XTRA|XTRA", "C001|N|Q1|P|IMG1")) {
+      // the projection leaves out the last column, so a parser that only
+      // splits the projected fields would not see the wrong width
+      val e = intercept[Exception] {
+        drain(landed(indivLine, bad), "indiv22", cols = Seq("cmte_id"))
+      }
+      assert(messages(e).exists(_.toLowerCase.contains("malformed")),
+        messages(e).mkString(" / "))
     }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil
-      else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(e).exists(_.contains("cannot represent")))
-    // the failed job left only .tmp litter (if anything), no data file
-    val litter = Files.list(Paths.get(outDir)).iterator()
-    val names = Iterator.continually(litter).takeWhile(_.hasNext)
-      .map(_.next().getFileName.toString).toList
-    assert(names.forall(!_.endsWith(".txt")))
   }
 }
